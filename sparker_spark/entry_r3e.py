@@ -65,6 +65,7 @@ from __future__ import annotations
 import itertools as _itertools
 
 from sparker_spark.llm.text import LANG_STOPWORDS
+from sparker_spark.session import shuffle_partitions
 
 _SINK_SEQ = _itertools.count()
 
@@ -671,7 +672,7 @@ def q_frequent_itemsets(spark, sf_dir):
     # aggregate to ~1 partition, which would serialize the O(m³)
     # combination explode below onto one core (same fixup as the
     # feature-generator mask loop)
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    par = shuffle_partitions(spark)
     arr = (
         toks.join(F.broadcast(s1.select("tok")), "tok")
         .groupBy("doc_id")

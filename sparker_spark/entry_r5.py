@@ -26,6 +26,7 @@ from contextlib import contextmanager
 from pyspark.sql import functions as F
 
 from sparker_spark.rounding import rnd
+from sparker_spark.session import shuffle_partitions
 
 STREAM_WINDOW = "1 hour"
 STREAM_WATERMARK = "2 hours"
@@ -171,7 +172,7 @@ def _stream_state_partitions(
         for f in os.listdir(d):
             if not f.startswith((".", "_")):
                 total += os.path.getsize(os.path.join(d, f))
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cap = shuffle_partitions(spark)
     return max(1, min(cap, -(-total // bytes_per_partition)))
 
 

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparker_spark.blocking.blockers import BlockCollection
-from sparker_spark.metablocking.weights import EdgeWeighting
+from sparker_spark.metablocking.weights import _shared_block_pairs
 
 
 @dataclass
@@ -92,11 +92,8 @@ class Evaluation:
         """Baseline 'no meta-blocking' PC/PQ straight from a block
         collection (utils.py:19-83, PCPQBlockCalc.scala:16-91): the
         candidate set is every distinct co-occurring pair."""
-        pairs = (
-            EdgeWeighting.co_occurrence(blocks)
-            .where(F.col("src") < F.col("dst"))
-            .select(F.col("src").alias("p1"), F.col("dst").alias("p2"))
-        )
+        half, _ = _shared_block_pairs(blocks)
+        pairs = half.select(F.col("src").alias("p1"), F.col("dst").alias("p2"))
         num_edges = pairs.count()
         num_gt = gt.count()
         num_matches = pairs.join(gt, ["p1", "p2"], "left_semi").count()

@@ -32,67 +32,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparker_spark.blocking.blockers import BlockCollection
+from sparker_spark.metablocking.weights import _shared_block_pairs
+
+# the reference's feature schema is float32 (feature_generator.py:
+# 233-245); every feature is computed in double and cast at the end
+FEATURE_TYPE = "float"
 
 
 class FeatureGenerator:
-    @staticmethod
-    def _pairs_bitmask(meta: DataFrame, asg: DataFrame) -> DataFrame:
-        """Mega-block pair relation from membership bitmasks: for every
-        co-occurring dirty pair (p1 < p2), cbs = bit_count(m1 & m2) and
-        the shared-block reciprocal sums unroll into <= 63 conditional
-        adds over driver-collected per-block constants (bounded scalar,
-        same class as the purge histogram). No shuffle, no aggregate —
-        the n²/2 mask loop is output-optimal in this regime (the
-        co-occurrence relation itself is Θ(n²); see
-        weights._co_occurrence_bitmask for the cost model)."""
-        rows = meta.select("block_id", "block_size", "comparisons").collect()
-        inv_comp = {}
-        inv_size = {}
-        for i, r in enumerate(rows):
-            inv_comp[i] = 1.0 / float(r["comparisons"])
-            inv_size[i] = 1.0 / float(r["block_size"])
-        bit_map = F.create_map(
-            *[
-                F.lit(v)
-                for i, r in enumerate(rows)
-                for v in (r["block_id"], 1 << i)
-            ]
-        )
-        masks = (
-            asg.select(F.col("block_id").alias("bid"), F.col("profile_id").alias("pid"))
-            .withColumn("bit", bit_map[F.col("bid")])
-            .groupBy("pid")
-            .agg(F.expr("bit_or(bit)").alias("mask"))
-            .localCheckpoint(eager=True)  # consumed by both loop sides
-        )
-
-        def shared_sum(consts: dict[int, float]) -> str:
-            return "(" + " + ".join(
-                f"IF(((m12 >> {i}) & 1) = 1, {consts[i]!r}D, 0.0D)"
-                for i in consts
-            ) + ")"
-
-        # re-spread the stream side: AQE coalesces the tiny mask
-        # aggregate to one partition, which would serialize the loop
-        # and every downstream stage of the checkpointed pair relation
-        par = int(masks.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        a_m = masks.repartition(par).select(
-            F.col("pid").alias("p1"), F.col("mask").alias("m1")
-        )
-        b_m = masks.select(F.col("pid").alias("p2"), F.col("mask").alias("m2"))
-        return (
-            a_m.crossJoin(b_m)
-            .where((F.col("p1") < F.col("p2")) & (F.expr("m1 & m2") != 0))
-            .withColumn("m12", F.expr("m1 & m2"))
-            .select(
-                "p1",
-                "p2",
-                F.expr("bit_count(m12)").cast("double").alias("cbs"),
-                F.expr(shared_sum(inv_comp)).alias("raccb_raw"),
-                F.expr(shared_sum(inv_size)).alias("rs"),
-            )
-        )
-
     @staticmethod
     def generate_features(
         blocks: BlockCollection,
@@ -122,79 +69,40 @@ class FeatureGenerator:
         total_comparisons = totals["t"] or 0
 
         # ---- pair relation with shared-block aggregates ----
-        # The block self-join is the dominant cost (Σ size(b)² rows);
+        # The pair enumeration is the dominant cost (Σ size(b)² rows);
         # it runs ONCE: the per-pair aggregates come straight out of
         # it, and the per-profile redundant/non-redundant stats
         # (calc_profiles_stats :13-57) are derived from the aggregated
         # half-edge relation below instead of a second enumeration.
-        # Block-level reciprocals ride along on the assignment side so
-        # the raw enumerated relation never joins meta.
-        #
-        # Mega-block fast path (same regime test as
-        # weights._co_occurrence_bitmask): <= 63 surviving blocks in a
-        # dirty collection whose Σ size² exceeds n² — every per-pair
-        # aggregate (cbs, Σ 1/comparisons, Σ 1/size over SHARED blocks)
-        # is a function of the two membership bitmasks and 63 per-block
-        # constants, so the enumeration shuffle + hash aggregate
-        # vanish: one output-optimal n²/2 mask loop computes all three
-        # in pure codegen.
-        pairs = None
-        if not blocks.clean:
-            sizes = blocks.meta.agg(
-                F.count("*").alias("b"),
-                F.sum(F.col("block_size") * F.col("block_size")).alias("ss"),
-            ).first()
-            if sizes["b"] <= 63:
-                n_profiles = asg.select("profile_id").distinct().count()
-                if n_profiles * n_profiles < (sizes["ss"] or 0):
-                    pairs = FeatureGenerator._pairs_bitmask(meta, asg)
-        if pairs is None:
-            meta_inv = meta.select(
-                F.col("block_id").alias("bid"),
-                (1.0 / F.col("comparisons")).alias("inv_comp"),
-                (1.0 / F.col("block_size")).alias("inv_size"),
-            )
-            a = asg.select(F.col("block_id").alias("bid"), F.col("profile_id").alias("p1"),
-                           F.col("source_id").alias("s1")).join(meta_inv, "bid")
-            b = asg.select(F.col("block_id").alias("bid"), F.col("profile_id").alias("p2"),
-                           F.col("source_id").alias("s2"))
-            if blocks.clean:
-                cond = (F.col("s1") != F.col("s2")) & (F.col("p1") < F.col("p2"))
-            else:
-                cond = F.col("p1") < F.col("p2")
-            # repartition by pair key before aggregating: the
-            # bid-clustered join output holds each pair once per shared
-            # block, so partial aggregation reduces ~nothing while its
-            # hash map scales with partition row count (see
-            # weights.co_occurrence for the full rationale); clustering
-            # first bounds agg memory by groups-per-partition and
-            # Catalyst elides the second exchange
-            pairs = (
-                a.join(b, "bid")
-                .where(cond)
-                .select("p1", "p2", "inv_comp", "inv_size")
-                .repartition("p1", "p2")
-                .groupBy("p1", "p2")
-                .agg(
-                    F.count("*").cast("double").alias("cbs"),
-                    F.sum("inv_comp").alias("raccb_raw"),
-                    F.sum("inv_size").alias("rs"),
-                )
-            )
+        half, _ = _shared_block_pairs(
+            blocks,
+            {
+                "inv_comp": 1.0 / F.col("comparisons"),
+                "inv_size": 1.0 / F.col("block_size"),
+            },
+            num_blocks_total,
+        )
         # three plan legs consume this relation (the feature join
         # plus both symmetrized halves of the stats derivation);
         # materialize once so the pair enumeration never re-runs per
         # leg (exchange reuse does not survive AQE re-optimization
         # across subtrees)
-        pairs = pairs.localCheckpoint(eager=True)
+        pairs = half.select(
+            F.col("src").alias("p1"),
+            F.col("dst").alias("p2"),
+            "cbs",
+            F.col("inv_comp_sum").alias("raccb_raw"),
+            F.col("inv_size_sum").alias("rs"),
+        ).localCheckpoint(eager=True)
 
         # redundant/non-redundant comparison stats, derived by
         # symmetrizing the half-edge relation (each unordered pair
         # contributes cbs to both endpoints — exactly the directed
         # neighborhood co_occurrence would enumerate). Dirty ER's
-        # self-inclusive neighborhood (weights.py co_occurrence
-        # docstring) adds num_blocks / +1 per profile; both quantities
-        # are integer-valued so the derivation is exact. Catalyst
+        # self-inclusive neighborhood (the self-loops of
+        # weights._shared_block_pairs) adds num_blocks / +1 per
+        # profile; both quantities are integer-valued so the
+        # derivation is exact. Catalyst
         # reuses the pairs shuffle exchange between this branch and
         # the main pair relation.
         sym = pairs.select(F.col("p1").alias("pid"), "cbs").unionByName(
@@ -241,15 +149,15 @@ class FeatureGenerator:
         out = e.select(
             "p1",
             "p2",
-            cfibf.cast("float").alias("cfibf"),
-            raccb.cast("float").alias("raccb"),
-            js.cast("float").alias("js"),
+            cfibf.cast(FEATURE_TYPE).alias("cfibf"),
+            raccb.cast(FEATURE_TYPE).alias("raccb"),
+            js.cast(FEATURE_TYPE).alias("js"),
             F.col("nonred_p1").cast("long").alias("numCompP1"),
             F.col("nonred_p2").cast("long").alias("numCompP2"),
-            F.col("rs").cast("float").alias("rs"),
-            aejs.cast("float").alias("aejs"),
-            nrs.cast("float").alias("nrs"),
-            wjs.cast("float").alias("wjs"),
+            F.col("rs").cast(FEATURE_TYPE).alias("rs"),
+            aejs.cast(FEATURE_TYPE).alias("aejs"),
+            nrs.cast(FEATURE_TYPE).alias("nrs"),
+            wjs.cast(FEATURE_TYPE).alias("wjs"),
         )
 
         if groundtruth is not None:

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparker_spark.rounding import rnd
+from sparker_spark.session import shuffle_partitions
 
 from sparker_spark.llm.hashing import (
     MERSENNE_31,
@@ -689,7 +690,7 @@ class SemanticDedup:
         # cells >> cores and skip this (salt = 1).
         join_keys = ["cell"]
         spark = embeddings.sparkSession
-        par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        par = shuffle_partitions(spark)
         n_salts = -(-4 * par // index.num_cells)  # ceil: ~4 keys/core
         if n_salts > 1:
             a = a.withColumn(

@@ -11,7 +11,11 @@ driver AND in every Python worker). This engine replaces that with the
 classic relational form: a self-equi-join of the exploded
 (block, profile) assignments on block_id followed by a hash aggregate.
 Catalyst picks shuffle-hash/sort-merge, AQE splits skewed block_ids,
-Tungsten spills — none of which the reference can do.
+Tungsten spills — none of which the reference can do. That enumeration
+lives in one place, ``_shared_block_pairs``, which also feeds the GSMB
+features (feature_generator.py) and the block-collection PC/PQ
+(evaluation.py); each weight formula is defined once, in
+``EdgeWeighting._weights``.
 
 Output: the *directed* edge relation ``edges(src, dst, weight, cbs)``
 (both orientations). Directed matters for parity: WNP/CNP thresholds
@@ -25,7 +29,7 @@ divide the CBS count by comparisons(b) for EVERY block b of the SOURCE
 profile — the division sits inside the block loop, so the weight is
 cbs / Π_{b∈blocks(src)} comparisons(b), asymmetric in src and
 dependent on non-shared blocks. We implement exactly that (Π via
-exp(Σ ln), see the ARCS branch below) because parity with the
+exp(Σ ln), see the ARCS entry of ``_weights``) because parity with the
 reference is the contract here; the meta-blocking papers' published
 ARCS — Σ over *shared* blocks of 1/comparisons(b) — is a different
 quantity and is NOT what this module computes. The oracle query
@@ -34,15 +38,236 @@ quantity and is NOT what this module computes. The oracle query
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparker_spark.blocking.blockers import BlockCollection
 from sparker_spark.metablocking.pruning_utils import WeightTypes
+from sparker_spark.session import shuffle_partitions
 
 EPS = 0.00000000001  # EJS epsilon guard, common_node_pruning.py:218,228
+
+
+def _shared_block_pairs(
+    blocks: BlockCollection,
+    sums: dict[str, Column] | None = None,
+    num_blocks: int | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """The one enumeration of co-occurring profile pairs: every edge
+    weight, ``all_weights``, the GSMB features and the block-collection
+    PC/PQ aggregate over the blocks two profiles share.
+
+    ``sums`` maps a name to a per-block Column over ``blocks.meta``;
+    each is summed over the shared blocks as ``<name>_sum``. Returns
+    ``(half, loops)``:
+
+    - ``half (src, dst, cbs, <name>_sum...)``: each co-occurring pair
+      once, src < dst. Dirty ER compares everything in a block;
+      clean-clean only across sources (pruning_utils.py:29-53
+      get_all_neighbors).
+    - ``loops``: dirty ER's self-loops, the same columns with
+      src == dst (None for clean-clean). calc_cbs's enumeration guard
+      is `(profile_id < neighbor_id) or first_step`
+      (common_node_pruning.py:139), so with first_step=True the
+      profile accumulates itself (cbs = #blocks). WNP/CNP thresholds,
+      WEP's global mean and EJS statistics are all computed over that
+      self-inclusive neighborhood; final edge sets never contain
+      self-loops.
+
+    ``num_blocks``: caller-supplied count of surviving blocks (an
+    optimizer hint, not a semantic knob). A dirty collection with
+    <= 63 blocks — the post-purge/filter mega-block regime, where
+    every block is near-universal and the pair aggregate is the
+    bottleneck — takes the bitmask plan, which replaces the
+    shuffle+agg entirely. Everything else takes the block self-join.
+    """
+    sums = sums or {}
+    if (
+        num_blocks is not None
+        and 0 < num_blocks <= 63  # 0 blocks: general path (an empty
+        # create_map is not a valid literal)
+        and not blocks.clean
+    ):
+        return _bitmask_pairs(blocks, sums)
+    a = blocks.assignments.select(
+        F.col("block_id").alias("bid"),
+        F.col("profile_id").alias("src"),
+        F.col("source_id").alias("src_source"),
+    )
+    if sums:
+        # ride the per-block values along on one side of the self-join
+        # (assignment-sized) instead of joining meta onto the Σ size²
+        # enumerated relation
+        a = a.join(
+            blocks.meta.select(
+                F.col("block_id").alias("bid"),
+                *[c.alias(name) for name, c in sums.items()],
+            ),
+            "bid",
+        )
+    b = blocks.assignments.select(
+        F.col("block_id").alias("bid"),
+        F.col("profile_id").alias("dst"),
+        F.col("source_id").alias("dst_source"),
+    )
+    # Every shared-block aggregate is SYMMETRIC in (p, q), so only the
+    # src < dst half is enumerated: the filter runs inside the join's
+    # codegen stage, BEFORE the pair-key exchange, halving shuffled
+    # rows and aggregation input on the hot path of every weight and
+    # pruning query.
+    if blocks.clean:
+        cond = (F.col("src_source") != F.col("dst_source")) & (
+            F.col("src") < F.col("dst")
+        )
+    else:
+        cond = F.col("src") < F.col("dst")
+    aggs = [F.count("*").cast("double").alias("cbs")] + [
+        F.sum(name).alias(f"{name}_sum") for name in sums
+    ]
+    # Repartition the raw enumeration by the pair key BEFORE the
+    # aggregation. The join output is clustered by bid, and a pair
+    # occurs exactly once per shared block — so a map-side partial
+    # aggregate over bid-partitioned data reduces ~nothing while its
+    # hash map grows with the partition's ROW count (for mega-block
+    # skew that is GBs per task: the GC-thrash path). Hash-clustering
+    # on (src, dst) first bounds aggregation memory by
+    # groups-per-partition, costs the same shuffled bytes the useless
+    # partial output did, and Catalyst elides the post-agg exchange
+    # since the distribution is satisfied.
+    half = (
+        a.join(b, "bid")
+        .where(cond)
+        .select("src", "dst", *sums)
+        .repartition("src", "dst")
+        .groupBy("src", "dst")
+        .agg(*aggs)
+    )
+    if blocks.clean:
+        return half, None
+    # self-loops are per-profile aggregates of the assignment relation
+    # — no enumeration needed
+    loops = (
+        a.groupBy("src")
+        .agg(*aggs)
+        .select("src", F.col("src").alias("dst"), *half.columns[2:])
+    )
+    return half, loops
+
+
+def _bitmask_pairs(
+    blocks: BlockCollection, sums: dict[str, Column]
+) -> tuple[DataFrame, DataFrame]:
+    """Mega-block plan of :func:`_shared_block_pairs`: <= 63 surviving
+    blocks (dirty ER) — block membership per profile fits ONE long
+    bitmask (63, not 64: bit 63 of a signed long is the sign bit and
+    1 << 63 is not a representable positive literal).
+
+    The general plan must shuffle the Σ size² enumeration on the pair
+    key and hash-aggregate it; with masks every shared-block aggregate
+    is computable on any single enumerated row: cbs(p, q) =
+    bit_count(m_p & m_q), and each sum unrolls into <= 63 conditional
+    adds over the driver-collected per-block constants (a bounded
+    scalar, same class as the purge histogram). Same output as the
+    general plan; self-loops are (p, p) over m_p alone.
+    """
+    rows = blocks.meta.select(
+        "block_id", "block_size", *[c.alias(name) for name, c in sums.items()]
+    ).collect()
+    bit_map = F.create_map(
+        *[F.lit(v) for i, r in enumerate(rows) for v in (r["block_id"], 1 << i)]
+    )
+    asg = blocks.assignments.select(
+        F.col("block_id").alias("bid"), F.col("profile_id").alias("pid")
+    ).withColumn("bit", bit_map[F.col("bid")])
+    # checkpoint BEFORE counting: the count then reads the stored
+    # relation instead of running the mask aggregation once for the
+    # count and again for the checkpoint, and both tiers below consume
+    # masks 2-3× (distributed per-executor blocks — #profiles rows
+    # never touch the driver)
+    masks = (
+        asg.groupBy("pid")
+        .agg(F.expr("bit_or(bit)").alias("mask"))
+        .localCheckpoint(eager=True)
+    )
+    n_profiles = masks.count()
+
+    def aggregates(m: str) -> list[Column]:
+        """cbs and the sums over the blocks whose bits are set in m."""
+        out = [F.expr(f"bit_count({m})").cast("double").alias("cbs")]
+        for name in sums:
+            terms = [
+                F.when(F.expr(f"({m} >> {i}) & 1") == 1, F.lit(float(r[name])))
+                .otherwise(F.lit(0.0))
+                for i, r in enumerate(rows)
+            ]
+            out.append(reduce(operator.add, terms).alias(f"{name}_sum"))
+        return out
+
+    # Two enumeration tiers, chosen by measured work:
+    #   block-join: Σ size(b)² enumerated rows, one survivor per pair
+    #     (lowest-shared-block filter);
+    #   mask nested-loop: n²/2 candidate rows over the n-row mask
+    #     relation.
+    # Near-universal blocks make Σ size² ≈ B·n² — up to B× the nested
+    # loop's work for the SAME Θ(n²) output, so when n² is smaller the
+    # quadratic loop IS the cheaper plan (it is output-optimal: this
+    # regime's co-occurrence relation is itself quadratic). Everywhere
+    # else the block-join wins by orders of magnitude and remains the
+    # scale-out plan.
+    if n_profiles * n_profiles < sum(r["block_size"] ** 2 for r in rows):
+        # AQE coalesces the tiny mask aggregate to ONE partition; left
+        # as-is the n²/2 loop (and everything downstream of it) would
+        # run single-task. Re-spread the STREAM side so the loop
+        # parallelizes; the build side stays compact for the broadcast.
+        a_m = masks.repartition(shuffle_partitions(masks.sparkSession)).select(
+            F.col("pid").alias("src"), F.col("mask").alias("m1")
+        )
+        b_m = masks.select(F.col("pid").alias("dst"), F.col("mask").alias("m2"))
+        pairs = a_m.crossJoin(b_m).where(
+            (F.col("src") < F.col("dst")) & (F.expr("m1 & m2") != 0)
+        )
+    else:
+        am = asg.join(masks, "pid").select(
+            "bid", F.col("pid").alias("src"), "bit", F.col("mask").alias("m1")
+        )
+        bm = asg.join(masks, "pid").select(
+            "bid", F.col("pid").alias("dst"), F.col("mask").alias("m2")
+        )
+        pairs = am.join(bm, "bid").where(
+            (F.col("src") < F.col("dst"))
+            # emit once: only from the lowest shared block
+            & (F.expr("(m1 & m2) & -(m1 & m2)") == F.col("bit"))
+        )
+    half = pairs.withColumn("m12", F.expr("m1 & m2")).select(
+        "src", "dst", *aggregates("m12")
+    )
+    loops = masks.select(
+        F.col("pid").alias("src"), F.col("pid").alias("dst"), *aggregates("mask")
+    )
+    return half, loops
+
+
+def _mirror(half: DataFrame) -> DataFrame:
+    """The other orientation of every row: src and dst swapped."""
+    return half.select(
+        F.col("dst").alias("src"), F.col("src").alias("dst"), *half.columns[2:]
+    )
+
+
+def _directed(base: DataFrame) -> DataFrame:
+    """Both orientations from a src <= dst base relation (the
+    undirected half plus any dirty self-loops)."""
+    return base.unionByName(_mirror(base.where(F.col("src") < F.col("dst"))))
+
+
+def _entropy_sum(use_entropy: bool) -> dict[str, Column] | None:
+    """The per-block value entropy-boosted weights sum over shared
+    blocks (as ``entropy_sum``)."""
+    return {"entropy": F.col("entropy")} if use_entropy else None
 
 
 @dataclass
@@ -66,17 +291,6 @@ class EdgeContext:
     # (src, dst) and keep the full directed relation.
     _base: DataFrame | None = None
 
-    @staticmethod
-    def _directed_view(base: DataFrame) -> DataFrame:
-        half = base.where(F.col("src") < F.col("dst"))
-        mirrored = half.select(
-            F.col("dst").alias("src"),
-            F.col("src").alias("dst"),
-            "cbs",
-            "weight",
-        )
-        return base.unionByName(mirrored)
-
     def materialize(self) -> "EdgeContext":
         """Checkpoint the edge relation once before multi-consumer
         pruning. Every pruner reads ``edges`` from several plan legs
@@ -91,7 +305,7 @@ class EdgeContext:
         if not self._materialized:
             if self._base is not None:
                 self._base = self._base.localCheckpoint(eager=True)
-                self.edges = EdgeContext._directed_view(self._base)
+                self.edges = _directed(self._base)
             else:
                 self.edges = self.edges.localCheckpoint(eager=True)
             self._materialized = True
@@ -112,253 +326,20 @@ class EdgeWeighting:
         blocks: BlockCollection,
         use_entropy: bool = False,
         num_blocks: int | None = None,
-        _parts: bool = False,
     ) -> DataFrame:
         """Directed co-occurrence pairs with shared-block aggregates:
-        (src, dst, cbs[, entropy_sum]).
+        (src, dst, cbs[, entropy_sum]) — both orientations of every
+        co-occurring pair plus dirty ER's self-loops.
 
-        Dirty ER compares everything in a block; clean-clean only
-        across sources (pruning_utils.py:29-53 get_all_neighbors).
-
-        ``num_blocks``: caller-supplied count of surviving blocks (an
-        optimizer hint, not a semantic knob). When the collection has
-        <= 63 blocks — the post-purge/filter mega-block regime, where
-        every block is near-universal and the pair aggregate is the
-        bottleneck — the bitmask plan below replaces the shuffle+agg
-        entirely.
+        ``num_blocks``: the optimizer hint of
+        :func:`_shared_block_pairs` (<= 63 dirty blocks take the
+        bitmask plan).
         """
-        if (
-            num_blocks is not None
-            and 0 < num_blocks <= 63  # 0 blocks: general path (an empty
-            # create_map is not a valid literal)
-            and not use_entropy
-            and not blocks.clean
-        ):
-            return EdgeWeighting._co_occurrence_bitmask(blocks, _parts)
-        a = blocks.assignments.select(
-            F.col("block_id").alias("bid"),
-            F.col("profile_id").alias("src"),
-            F.col("source_id").alias("src_source"),
+        half, loops = _shared_block_pairs(
+            blocks, _entropy_sum(use_entropy), num_blocks
         )
-        if use_entropy:
-            # ride the per-block entropy along on one side of the
-            # self-join (assignment-sized) instead of joining meta
-            # onto the Σ size² enumerated relation
-            a = a.join(
-                blocks.meta.select(F.col("block_id").alias("bid"), "entropy"),
-                "bid",
-            )
-        b = blocks.assignments.select(
-            F.col("block_id").alias("bid"),
-            F.col("profile_id").alias("dst"),
-            F.col("source_id").alias("dst_source"),
-        )
-        # The directed neighborhood is SYMMETRIC in its aggregates: cbs
-        # and the shared-block entropy sum are identical for (p, q) and
-        # (q, p). So enumerate and aggregate only the src < dst half —
-        # the filter runs inside the join's codegen stage, BEFORE the
-        # pair-key exchange, halving shuffled rows and aggregation
-        # input on the hot path of every weight/pruning query — then
-        # mirror the aggregated relation (|edges| rows, tiny next to
-        # the enumeration) to reconstruct both orientations.
-        #
-        # Dirty ER additionally INCLUDES a self-loop per profile —
-        # calc_cbs's enumeration guard is
-        # `(profile_id < neighbor_id) or first_step`
-        # (common_node_pruning.py:139), so with first_step=True the
-        # profile accumulates itself (weight = #blocks). WNP/CNP
-        # thresholds, WEP's global mean and EJS statistics are all
-        # computed over that self-inclusive neighborhood; final edge
-        # sets never contain self-loops (half() takes src < dst). The
-        # self-loop aggregates (cbs = #blocks(p), entropy_sum =
-        # Σ entropy over p's blocks) are per-profile aggregates of the
-        # assignment relation — no enumeration needed. Clean-clean
-        # never sees self (cross-source only, pruning_utils.py:29-53).
-        if blocks.clean:
-            cond = (F.col("src_source") != F.col("dst_source")) & (
-                F.col("src") < F.col("dst")
-            )
-        else:
-            cond = F.col("src") < F.col("dst")
-        pairs = a.join(b, "bid").where(cond)
-
-        aggs = [
-            F.count("*").cast("double").alias("cbs"),
-        ]
-        if use_entropy:
-            aggs.append(F.sum("entropy").alias("entropy_sum"))
-        # Repartition the raw enumeration by the pair key BEFORE the
-        # aggregation. The join output is clustered by bid, and a pair
-        # occurs exactly once per shared block — so a map-side partial
-        # aggregate over bid-partitioned data reduces ~nothing while
-        # its hash map grows with the partition's ROW count (for
-        # mega-block skew that is GBs per task: the GC-thrash path).
-        # Hash-clustering on (src, dst) first bounds aggregation
-        # memory by groups-per-partition, costs the same shuffled
-        # bytes the useless partial output did, and Catalyst elides
-        # the post-agg exchange since the distribution is satisfied.
-        cols = ["src", "dst", "entropy"] if use_entropy else ["src", "dst"]
-        half = (
-            pairs.select(*cols)
-            .repartition("src", "dst")
-            .groupBy("src", "dst")
-            .agg(*aggs)
-        )
-
-        out_cols = ["src", "dst", "cbs"] + (
-            ["entropy_sum"] if use_entropy else []
-        )
-        if _parts:
-            half = half.select(*out_cols)
-            if blocks.clean:
-                return half, None
-            loop_aggs = [F.count("*").cast("double").alias("cbs")]
-            if use_entropy:
-                loop_aggs.append(F.sum("entropy").alias("entropy_sum"))
-            loops = (
-                a.select("src", *(["entropy"] if use_entropy else []))
-                .groupBy("src")
-                .agg(*loop_aggs)
-                .select(F.col("src"), F.col("src").alias("dst"), *out_cols[2:])
-                .select(*out_cols)
-            )
-            return half, loops
-        mirrored = half.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), *out_cols[2:]
-        )
-        directed = half.select(*out_cols).unionByName(mirrored)
-        if blocks.clean:
-            return directed
-
-        self_aggs = [F.count("*").cast("double").alias("cbs")]
-        if use_entropy:
-            self_aggs.append(F.sum("entropy").alias("entropy_sum"))
-        loops = (
-            a.select("src", *(["entropy"] if use_entropy else []))
-            .groupBy("src")
-            .agg(*self_aggs)
-            .select(F.col("src"), F.col("src").alias("dst"), *out_cols[2:])
-            .select(*out_cols)
-        )
-        return directed.unionByName(loops)
-
-    @staticmethod
-    def _co_occurrence_bitmask(
-        blocks: BlockCollection, _parts: bool = False
-    ) -> DataFrame:
-        """Mega-block fast path: <= 63 surviving blocks (dirty ER, no
-        entropy) — block membership per profile fits ONE long bitmask
-        (63, not 64: bit 63 of a signed long is the sign bit and
-        1 << 63 is not a representable positive literal).
-
-        The general plan must shuffle the Σ size² enumeration on the
-        pair key and hash-aggregate it to count shared blocks; with
-        masks, cbs(p, q) = bit_count(m_p & m_q) is computable on any
-        single enumerated row, so each pair is emitted exactly ONCE —
-        from its lowest shared block (bid's bit == lowest set bit of
-        m_p & m_q, a pure codegen filter) — and the exchange + hash
-        aggregate vanish from the plan. Output is identical to the
-        general path (directed relation incl. dirty self-loops, which
-        are just (p, p, bit_count(m_p))). The 64-row block-id
-        collect is a bounded driver scalar, same class as the purge
-        histogram.
-        """
-        ids = [r[0] for r in blocks.meta.select("block_id").collect()]
-        bit_map = F.create_map(
-            *[
-                F.lit(v)
-                for bid, i in ((bid, i) for i, bid in enumerate(ids))
-                for v in (bid, 1 << i)
-            ]
-        )
-        asg = blocks.assignments.select(
-            F.col("block_id").alias("bid"), F.col("profile_id").alias("pid")
-        ).withColumn("bit", bit_map[F.col("bid")])
-        masks = asg.groupBy("pid").agg(
-            F.expr("bit_or(bit)").alias("mask")
-        )
-
-        # Two enumeration strategies, chosen by measured work, both
-        # bounded driver scalars:
-        #   block-join: Σ size(b)² enumerated rows, one survivor per
-        #     pair (lowest-shared-block filter);
-        #   mask nested-loop: n²/2 candidate rows over the n-row mask
-        #     relation.
-        # Near-universal blocks make Σ size² ≈ B·n² — up to B× the
-        # nested loop's work for the SAME Θ(n²) output, so when n² is
-        # smaller the quadratic loop IS the cheaper plan (it is
-        # output-optimal: this regime's co-occurrence relation is
-        # itself quadratic). Everywhere else the block-join wins by
-        # orders of magnitude and remains the scale-out plan.
-        stats = blocks.meta.agg(
-            F.sum(F.col("block_size") * F.col("block_size")).alias("ss"),
-            F.sum("block_size").alias("s"),
-        ).first()
-        sum_sq = stats["ss"] or 0
-        # checkpoint BEFORE counting: the count then reads the stored
-        # relation instead of running the mask aggregation once for
-        # the count and again for the checkpoint, and every branch
-        # below consumes masks 2-3× (distributed per-executor blocks —
-        # #profiles rows never touch the driver)
-        masks = masks.localCheckpoint(eager=True)
-        n_profiles = masks.count()
-        if n_profiles * n_profiles < sum_sq:
-            # AQE coalesces the tiny mask aggregate to ONE partition;
-            # left as-is the n²/2 loop (and everything downstream of
-            # it) would run single-task. Re-spread the STREAM side so
-            # the loop parallelizes; the build side stays compact for
-            # the broadcast.
-            par = int(masks.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-            a_m = masks.repartition(par).select(
-                F.col("pid").alias("src"), F.col("mask").alias("m1")
-            )
-            b_m = masks.select(
-                F.col("pid").alias("dst"), F.col("mask").alias("m2")
-            )
-            half = (
-                a_m.crossJoin(b_m)
-                .where(
-                    (F.col("src") < F.col("dst"))
-                    & (F.expr("m1 & m2") != 0)
-                )
-                .select(
-                    "src",
-                    "dst",
-                    F.expr("bit_count(m1 & m2)").cast("double").alias("cbs"),
-                )
-            )
-        else:
-            am = asg.join(masks, "pid").select(
-                "bid", F.col("pid").alias("src"), F.col("bit").alias("bit"),
-                F.col("mask").alias("m1"),
-            )
-            bm = asg.join(masks, "pid").select(
-                "bid", F.col("pid").alias("dst"), F.col("mask").alias("m2")
-            )
-            half = (
-                am.join(bm, "bid")
-                .where(
-                    (F.col("src") < F.col("dst"))
-                    # emit once: only from the lowest shared block
-                    & (F.expr("(m1 & m2) & -(m1 & m2)") == F.col("bit"))
-                )
-                .select(
-                    "src",
-                    "dst",
-                    F.expr("bit_count(m1 & m2)").cast("double").alias("cbs"),
-                )
-            )
-        loops = masks.select(
-            F.col("pid").alias("src"),
-            F.col("pid").alias("dst"),
-            F.expr("bit_count(mask)").cast("double").alias("cbs"),
-        )
-        if _parts:
-            return half, loops
-        mirrored = half.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "cbs"
-        )
-        return half.unionByName(mirrored).unionByName(loops)
+        directed = half.unionByName(_mirror(half))
+        return directed if loops is None else directed.unionByName(loops)
 
     @staticmethod
     def arcs_log_denominator(blocks: BlockCollection) -> DataFrame:
@@ -427,147 +408,29 @@ class EdgeWeighting:
             WeightTypes.ECBS,
             WeightTypes.CHI_SQUARE,
         )
-        base = None
         if symmetric:
-            half, loops = EdgeWeighting.co_occurrence(
-                blocks, use_entropy, num_blocks, _parts=True
+            half, loops = _shared_block_pairs(
+                blocks, _entropy_sum(use_entropy), num_blocks
             )
             co = half if loops is None else half.unionByName(loops)
         else:
             co = EdgeWeighting.co_occurrence(blocks, use_entropy, num_blocks)
-
-        sizes = EdgeWeighting.profile_num_blocks(profile_blocks_filtered)
-        src_sz = sizes.select(
-            F.col("profile_id").alias("src"), F.col("num_blocks").alias("src_blocks")
+        e, num_edges = EdgeWeighting._with_profile_stats(
+            co, blocks, profile_blocks_filtered, [weight_type]
         )
-        dst_sz = sizes.select(
-            F.col("profile_id").alias("dst"), F.col("num_blocks").alias("dst_blocks")
-        )
-        if weight_type == WeightTypes.CBS:
-            # CBS is the raw co-occurrence count — |B(p)| never enters
-            # the formula, so the two per-profile-size joins are dead
-            # weight on this path. Skipping them keeps the CBS edge
-            # dump a pure enumerate→aggregate plan.
-            e = co
-        else:
-            e = co.join(src_sz, "src").join(dst_sz, "dst")
-
-        ent = F.col("entropy_sum") if use_entropy else F.lit(1.0)
-        cbs = F.col("cbs")
-        B = F.lit(float(num_blocks))
-        num_edges = None
-
-        if weight_type == WeightTypes.CBS:
-            # calc_weights leaves CBS counts untouched (entropy is
-            # accumulated but unused for CBS in the reference).
-            weight = cbs
-        elif weight_type == WeightTypes.JS:
-            weight = (
-                cbs / (F.col("src_blocks") + F.col("dst_blocks") - cbs)
-            ) * ent
-        elif weight_type == WeightTypes.ECBS:
-            weight = (
-                cbs
-                * F.log10(B / F.col("src_blocks"))
-                * F.log10(B / F.col("dst_blocks"))
-                * ent
-            )
-        elif weight_type == WeightTypes.ARCS:
-            # Reference ARCS (both Python common_node_pruning.py:185-201
-            # and Scala CommonNodePruning.scala:236-258) divides the CBS
-            # count by comparisons(b) for EVERY block b of the SOURCE
-            # profile — not 1/comparisons summed over shared blocks as
-            # in the meta-blocking papers. weight(src,dst) =
-            # cbs / Π_{b∈blocks(src)} comparisons(b), asymmetric in
-            # src. Π via exp(Σ ln) — one agg + join instead of a
-            # per-profile loop; underflow for block-rich profiles
-            # matches the reference's repeated-division underflow (→0).
-            # Documented deviations: entropy (reference multiplies
-            # entropies[dst] once per src block — ent^{|blocks(src)|};
-            # we multiply once) and >2-source clean comparisons
-            # (reference uses Π per-source sizes; our meta stores
-            # pairwise cross-comparisons — identical for ≤2 sources).
-            logden = EdgeWeighting.arcs_log_denominator(blocks)
-            e = e.join(
-                logden.select(
-                    F.col("profile_id").alias("src"),
-                    F.col("logden").alias("src_logden"),
-                ),
-                "src",
-            )
-            weight = cbs * F.exp(-F.col("src_logden")) * ent
-        elif weight_type == WeightTypes.CHI_SQUARE:
-            weight = EdgeWeighting._chi_square(
-                cbs, F.col("dst_blocks"), F.col("src_blocks"), B
-            ) * ent
-        elif weight_type == WeightTypes.EJS:
-            # stats pre-pass (compute_statistics :56-101): per-profile
-            # distinct-neighbor counts + global distinct edge count.
-            # NOTE the reference's compute_statistics carries a reset
-            # bug — its cleanup loop zeroes local_weights[i] for
-            # i in range(neighbors_number) instead of
-            # local_weights[neighbors[i]] (common_node_pruning.py:
-            # 94-95) — so neighbor flags leak across the profiles of a
-            # partition and its statistics are partition-order-
-            # dependent. This engine computes the intended exact
-            # statistics (tests/test_multi3_parity.py pins parity with
-            # the reference formula fed corrected stats).
-            # co is consumed by three legs (the edge join, the stats
-            # aggregate, the distinct-edge count) — checkpoint it once
-            # so the enumeration shuffle doesn't run three times.
-            co = co.localCheckpoint(eager=True)
-            e = co.join(src_sz, "src").join(dst_sz, "dst")
-            per_profile = co.groupBy("src").agg(F.count("*").alias("e_cnt"))
-            num_edges = co.where(F.col("src") < F.col("dst")).count()
-            E = F.lit(float(num_edges))
-            e = e.join(
-                per_profile.select(
-                    F.col("src").alias("src"), F.col("e_cnt").alias("src_edges")
-                ),
-                "src",
-                "left",
-            ).join(
-                per_profile.select(
-                    F.col("src").alias("dst"), F.col("e_cnt").alias("dst_edges")
-                ),
-                "dst",
-                "left",
-            )
-            js = cbs / (F.col("src_blocks") + F.col("dst_blocks") - cbs)
-            e_src = F.coalesce(F.col("src_edges").cast("double"), F.lit(0.0)) + EPS
-            e_dst = F.coalesce(F.col("dst_edges").cast("double"), F.lit(EPS))
-            # the reference swallows math errors (log of non-positive,
-            # zero division) into weight 0 via try/except
-            # (common_node_pruning.py:233-246); the denominator guard
-            # reproduces that without relying on engine NaN semantics
-            if use_entropy:
-                # parity with the reference's (quirky) entropy
-                # bracketing, common_node_pruning.py:232-239
-                arg = E / e_dst * F.log10(E / e_src)
-                weight = F.when(arg > 0, (js * ent) * F.log10(arg)).otherwise(0.0)
-            else:
-                den = e_dst * F.log10(E / e_src)
-                weight = F.when(den > 0, js * F.log10(E / den)).otherwise(0.0)
-            weight = F.coalesce(weight, F.lit(0.0))
-
+        weight = EdgeWeighting._weights(
+            num_blocks, num_edges, F.col("entropy_sum") if use_entropy else None
+        )[weight_type]
         weighted = e.select(
             "src", "dst", "cbs", weight.cast("double").alias("weight")
         )
-        if symmetric:
-            return EdgeContext(
-                edges=EdgeContext._directed_view(weighted),
-                weight_type=weight_type,
-                num_blocks=num_blocks,
-                num_edges=num_edges,
-                profiles=profile_blocks_filtered,
-                _base=weighted,
-            )
         return EdgeContext(
-            edges=weighted,
+            edges=_directed(weighted) if symmetric else weighted,
             weight_type=weight_type,
             num_blocks=num_blocks,
             num_edges=num_edges,
             profiles=profile_blocks_filtered,
+            _base=weighted if symmetric else None,
         )
 
     @staticmethod
@@ -596,86 +459,162 @@ class EdgeWeighting:
         (common_node_pruning.py:149-263); pinned by the
         ``er_all_weight_edges`` oracle and tests.
         """
-        # co feeds the edge join, the EJS stats aggregate and the
-        # distinct-edge count — checkpoint once (same reasoning as the
-        # EJS branch of weighted_edges)
         num_blocks = blocks.meta.count()
-        co = EdgeWeighting.co_occurrence(
-            blocks, num_blocks=num_blocks
-        ).localCheckpoint(eager=True)
-        B = F.lit(float(num_blocks))
+        e, num_edges = EdgeWeighting._with_profile_stats(
+            EdgeWeighting.co_occurrence(blocks, num_blocks=num_blocks),
+            blocks,
+            profile_blocks_filtered,
+            WeightTypes.ALL,
+        )
+        w = EdgeWeighting._weights(num_blocks, num_edges)
+        cbs = F.col("cbs")
+        return e.select(
+            "src",
+            "dst",
+            cbs.alias("cbs"),
+            w[WeightTypes.JS].cast("double").alias("js"),
+            w[WeightTypes.ECBS].cast("double").alias("ecbs"),
+            (F.log(cbs) - F.col("src_logden")).cast("double").alias("log_arcs"),
+            w[WeightTypes.CHI_SQUARE].cast("double").alias("chi2"),
+            w[WeightTypes.EJS].cast("double").alias("ejs"),
+        )
 
-        sizes = EdgeWeighting.profile_num_blocks(profile_blocks_filtered)
-        logden = EdgeWeighting.arcs_log_denominator(blocks)
-        per_profile = co.groupBy("src").agg(F.count("*").alias("e_cnt"))
-        num_edges = co.where(F.col("src") < F.col("dst")).count()
-        E = F.lit(float(num_edges))
-
-        e = (
-            co.join(
+    @staticmethod
+    def _with_profile_stats(
+        co: DataFrame,
+        blocks: BlockCollection,
+        profile_blocks_filtered: DataFrame,
+        weight_types: list[str],
+    ) -> tuple[DataFrame, int | None]:
+        """Join onto the co-occurrence relation the per-profile
+        quantities ``weight_types`` read: |B(src)| and |B(dst)| (every
+        type but CBS), the source's ARCS log-denominator, and EJS's
+        distinct-neighbor counts of both endpoints. Returns the joined
+        relation and EJS's global distinct-edge count (None without
+        EJS)."""
+        num_edges = None
+        if WeightTypes.EJS in weight_types:
+            # stats pre-pass (compute_statistics :56-101): per-profile
+            # distinct-neighbor counts + global distinct edge count.
+            # NOTE the reference's compute_statistics carries a reset
+            # bug — its cleanup loop zeroes local_weights[i] for
+            # i in range(neighbors_number) instead of
+            # local_weights[neighbors[i]] (common_node_pruning.py:
+            # 94-95) — so neighbor flags leak across the profiles of a
+            # partition and its statistics are partition-order-
+            # dependent. This engine computes the intended exact
+            # statistics (tests/test_multi3_parity.py pins parity with
+            # the reference formula fed corrected stats).
+            # co is consumed by three legs (the edge join, the stats
+            # aggregate, the distinct-edge count) — checkpoint it once
+            # so the enumeration shuffle doesn't run three times.
+            co = co.localCheckpoint(eager=True)
+            per_profile = co.groupBy("src").agg(F.count("*").alias("e_cnt"))
+            num_edges = co.where(F.col("src") < F.col("dst")).count()
+        e = co
+        if set(weight_types) != {WeightTypes.CBS}:
+            # CBS is the raw co-occurrence count — |B(p)| never enters
+            # the formula, so the CBS edge dump stays a pure
+            # enumerate→aggregate plan without these two joins.
+            sizes = EdgeWeighting.profile_num_blocks(profile_blocks_filtered)
+            e = e.join(
                 sizes.select(
                     F.col("profile_id").alias("src"),
                     F.col("num_blocks").alias("src_blocks"),
                 ),
                 "src",
-            )
-            .join(
+            ).join(
                 sizes.select(
                     F.col("profile_id").alias("dst"),
                     F.col("num_blocks").alias("dst_blocks"),
                 ),
                 "dst",
             )
-            .join(
+        if WeightTypes.ARCS in weight_types:
+            logden = EdgeWeighting.arcs_log_denominator(blocks)
+            e = e.join(
                 logden.select(
                     F.col("profile_id").alias("src"),
                     F.col("logden").alias("src_logden"),
                 ),
                 "src",
             )
-            .join(
-                per_profile.select(
-                    F.col("src"), F.col("e_cnt").alias("src_edges")
-                ),
+        if WeightTypes.EJS in weight_types:
+            e = e.join(
+                per_profile.select(F.col("src"), F.col("e_cnt").alias("src_edges")),
                 "src",
                 "left",
-            )
-            .join(
+            ).join(
                 per_profile.select(
                     F.col("src").alias("dst"), F.col("e_cnt").alias("dst_edges")
                 ),
                 "dst",
                 "left",
             )
-        )
+        return e, num_edges
 
+    @staticmethod
+    def _weights(
+        num_blocks: int, num_edges: int | None = None, ent: Column | None = None
+    ) -> dict[str, Column]:
+        """Every weight formula (calc_weights, common_node_pruning.py:
+        149-263) over the relation :meth:`_with_profile_stats` builds;
+        EJS only when ``num_edges`` is given. ``ent``: the shared-block
+        entropy sum the weights are boosted by (None: no boost)."""
         cbs = F.col("cbs")
-        js = cbs / (F.col("src_blocks") + F.col("dst_blocks") - cbs)
-        ecbs = (
-            cbs
-            * F.log10(B / F.col("src_blocks"))
-            * F.log10(B / F.col("dst_blocks"))
-        )
-        log_arcs = F.log(cbs) - F.col("src_logden")
-        chi2 = EdgeWeighting._chi_square(
-            cbs, F.col("dst_blocks"), F.col("src_blocks"), B
-        )
-        e_src = F.coalesce(F.col("src_edges").cast("double"), F.lit(0.0)) + EPS
-        e_dst = F.coalesce(F.col("dst_edges").cast("double"), F.lit(EPS))
-        den = e_dst * F.log10(E / e_src)
-        ejs = F.coalesce(
-            F.when(den > 0, js * F.log10(E / den)).otherwise(0.0), F.lit(0.0)
-        )
-        return e.select(
-            "src",
-            "dst",
-            cbs.alias("cbs"),
-            js.cast("double").alias("js"),
-            ecbs.cast("double").alias("ecbs"),
-            log_arcs.cast("double").alias("log_arcs"),
-            chi2.cast("double").alias("chi2"),
-            ejs.cast("double").alias("ejs"),
-        )
+        src_blocks = F.col("src_blocks")
+        dst_blocks = F.col("dst_blocks")
+        B = F.lit(float(num_blocks))
+
+        def boost(w):
+            return w if ent is None else w * ent
+
+        js = cbs / (src_blocks + dst_blocks - cbs)
+        weights = {
+            # calc_weights leaves CBS counts untouched (entropy is
+            # accumulated but unused for CBS in the reference).
+            WeightTypes.CBS: cbs,
+            WeightTypes.JS: boost(js),
+            WeightTypes.ECBS: boost(
+                cbs * F.log10(B / src_blocks) * F.log10(B / dst_blocks)
+            ),
+            # Reference ARCS (both Python common_node_pruning.py:185-201
+            # and Scala CommonNodePruning.scala:236-258) divides the CBS
+            # count by comparisons(b) for EVERY block b of the SOURCE
+            # profile — not 1/comparisons summed over shared blocks as
+            # in the meta-blocking papers. weight(src,dst) =
+            # cbs / Π_{b∈blocks(src)} comparisons(b), asymmetric in
+            # src. Π via exp(Σ ln) — one agg + join instead of a
+            # per-profile loop; underflow for block-rich profiles
+            # matches the reference's repeated-division underflow (→0).
+            # Documented deviations: entropy (reference multiplies
+            # entropies[dst] once per src block — ent^{|blocks(src)|};
+            # we multiply once) and >2-source clean comparisons
+            # (reference uses Π per-source sizes; our meta stores
+            # pairwise cross-comparisons — identical for ≤2 sources).
+            WeightTypes.ARCS: boost(cbs * F.exp(-F.col("src_logden"))),
+            WeightTypes.CHI_SQUARE: boost(
+                EdgeWeighting._chi_square(cbs, dst_blocks, src_blocks, B)
+            ),
+        }
+        if num_edges is not None:
+            E = F.lit(float(num_edges))
+            e_src = F.coalesce(F.col("src_edges").cast("double"), F.lit(0.0)) + EPS
+            e_dst = F.coalesce(F.col("dst_edges").cast("double"), F.lit(EPS))
+            # the reference swallows math errors (log of non-positive,
+            # zero division) into weight 0 via try/except
+            # (common_node_pruning.py:233-246); the denominator guard
+            # reproduces that without relying on engine NaN semantics
+            if ent is not None:
+                # parity with the reference's (quirky) entropy
+                # bracketing, common_node_pruning.py:232-239
+                arg = E / e_dst * F.log10(E / e_src)
+                ejs = F.when(arg > 0, (js * ent) * F.log10(arg)).otherwise(0.0)
+            else:
+                den = e_dst * F.log10(E / e_src)
+                ejs = F.when(den > 0, js * F.log10(E / den)).otherwise(0.0)
+            weights[WeightTypes.EJS] = F.coalesce(ejs, F.lit(0.0))
+        return weights
 
     @staticmethod
     def _chi_square(cbs, dst_blocks, src_blocks, total_blocks):

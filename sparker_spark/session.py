@@ -46,3 +46,15 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def shuffle_partitions(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as a positive int. The conf is
+    free text — values such as "auto" (a Databricks setting) or an
+    empty string are not an int — so anything that is not a positive
+    integer falls back to ``sparkContext.defaultParallelism``."""
+    try:
+        par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        par = 0
+    return par if par > 0 else spark.sparkContext.defaultParallelism

@@ -127,3 +127,108 @@ def test_bitmask_blockjoin_tier_sparse_blocks(spark):
         for r in EdgeWeighting.co_occurrence(blocks).collect()
     }
     assert fast == general
+
+
+def _mask_loop_blocks(spark, sf_dir):
+    """The unigram mega-block fixture of
+    test_bitmask_fast_path_equals_general (n² < Σ size²: mask loop)."""
+    from sparker_spark.blocking.blockers import Blocking
+    from sparker_spark.entry import _doc_keys_unigram
+
+    keys = _doc_keys_unigram(spark, sf_dir)
+    return Blocking.blocks_from_keys(keys, clean=False, assign_ids=False)
+
+
+def _block_join_blocks(spark, sf_dir):
+    """The sparse fixture of test_bitmask_blockjoin_tier_sparse_blocks
+    (n² > Σ size²: block-join tier)."""
+    from sparker_spark.blocking.blockers import Blocking
+
+    rows = []
+    for b in range(40):
+        for p in range(b % 3 + 2):
+            rows.append((((b * 7) + p * 13) % 100, 0, f"k{b}"))
+    keys = spark.createDataFrame(
+        rows, "profile_id long, source_id int, key string"
+    ).distinct()
+    return Blocking.blocks_from_keys(keys, clean=False, assign_ids=False)
+
+
+TIERS = [(_mask_loop_blocks, True), (_block_join_blocks, False)]
+
+
+def _with_entropy(blocks):
+    """Distinct per-block entropies, so Σ entropy checks which blocks
+    were summed (blocks_from_keys gives every block 1.0)."""
+    from sparker_spark.blocking.blockers import BlockCollection
+
+    meta = blocks.meta.withColumn("entropy", 1.0 / (F.col("block_id") + 3.0))
+    return BlockCollection(blocks.assignments, meta, blocks.clean)
+
+
+def _by_pair(df):
+    return {(r["src"], r["dst"]): tuple(r)[2:] for r in df.collect()}
+
+
+def _assert_close(fast, general, tol=1e-9):
+    assert fast.keys() == general.keys()
+    for k, row in fast.items():
+        for a, b in zip(row, general[k]):
+            assert abs(a - b) <= tol, (k, row, general[k])
+
+
+@pytest.mark.parametrize("build,mask_loop", TIERS)
+def test_shared_block_sums_agree_across_plans(spark, sf_dir, build, mask_loop):
+    """Both bitmask tiers and the general plan give the same
+    (src, dst, cbs, Σ entropy, Σ 1/comparisons, Σ 1/block_size), for
+    the pair half and for the dirty self-loops."""
+    from sparker_spark.metablocking.weights import _shared_block_pairs
+
+    blocks = _with_entropy(build(spark, sf_dir))
+    nb = blocks.meta.count()
+    assert nb <= 63
+    sums = {
+        "entropy": F.col("entropy"),
+        "inv_comp": 1.0 / F.col("comparisons"),
+        "inv_size": 1.0 / F.col("block_size"),
+    }
+    fast_half, fast_loops = _shared_block_pairs(blocks, sums, nb)
+    half, loops = _shared_block_pairs(blocks, sums)
+    plan = fast_half._jdf.queryExecution().executedPlan().toString()
+    assert ("NestedLoopJoin" in plan) == mask_loop, plan[:2000]
+    assert fast_half.columns == half.columns == [
+        "src", "dst", "cbs", "entropy_sum", "inv_comp_sum", "inv_size_sum"
+    ]
+    _assert_close(_by_pair(fast_half), _by_pair(half))
+    _assert_close(_by_pair(fast_loops), _by_pair(loops))
+
+
+@pytest.mark.parametrize("build,mask_loop", TIERS)
+def test_generate_features_agree_across_plans(
+    spark, sf_dir, monkeypatch, build, mask_loop
+):
+    """generate_features over the bitmask tiers equals the general
+    plan to 1e-9, compared before the float32 cast."""
+    from sparker_spark import feature_generator
+    from sparker_spark.metablocking import weights
+
+    blocks = build(spark, sf_dir)
+    monkeypatch.setattr(feature_generator, "FEATURE_TYPE", "double")
+    cols = ["cfibf", "raccb", "js", "numCompP1", "numCompP2", "rs", "aejs", "nrs", "wjs"]
+
+    def features():
+        out = feature_generator.FeatureGenerator.generate_features(blocks)
+        return {
+            (r["p1"], r["p2"]): tuple(r[c] for c in cols)
+            for r in out.collect()
+        }
+
+    fast = features()
+    monkeypatch.setattr(
+        feature_generator,
+        "_shared_block_pairs",
+        lambda blocks, sums, num_blocks: weights._shared_block_pairs(blocks, sums),
+    )
+    general = features()
+    assert fast
+    _assert_close(fast, general)

@@ -78,12 +78,12 @@ def main():
         )
         # Judge each nested-loop operator by ITS OWN formatted-explain
         # detail block, not the whole plan: the <=63-block mega-block
-        # mask loop (weights._co_occurrence_bitmask /
-        # FeatureGenerator._pairs_bitmask) is an OUTPUT-OPTIMAL
-        # quadratic loop recognizable by the bit_count(mask) condition
-        # ON THE JOIN NODE itself — a plan-wide "mentions bit_count"
-        # test would silently waive an unrelated accidental cross join
-        # elsewhere in the same query.
+        # mask loop (the bitmask plan of weights._shared_block_pairs,
+        # behind both the edge weights and the GSMB features) is an
+        # OUTPUT-OPTIMAL quadratic loop recognizable by the
+        # bit_count(mask) condition ON THE JOIN NODE itself — a
+        # plan-wide "mentions bit_count" test would silently waive an
+        # unrelated accidental cross join elsewhere in the same query.
         detail_blocks = re.split(r"\n\s*\n", plan)
         nested_blocks = [
             b
