@@ -286,7 +286,9 @@ class AttributeClustering:
                 "token"
             ),
         ).where(F.length("token") > 0)
-        tokens = tokens_all.distinct().cache()
+        # the attribute list and the signatures both read the distinct
+        # tokens: one lazy checkpoint, freed with `tokens`
+        tokens = tokens_all.distinct().localCheckpoint(eager=False)
         all_attrs = [r["attr_key"] for r in tokens.select("attr_key").distinct().collect()]
         sigs = AttributeClustering.signatures(tokens, num_hashes, seed)
         edges = AttributeClustering.similarity_edges(
@@ -298,5 +300,4 @@ class AttributeClustering:
             clusters = AttributeClustering.cluster_entropies(
                 tokens_all, clusters, normalize_entropy
             )
-        tokens.unpersist()
         return clusters

@@ -380,9 +380,10 @@ def q_stream_hll(spark, sf_dir):
     sink = f"stream_hll_sink_{next(_SINK_SEQ)}"
     # complete mode re-emits the full register table every batch — the
     # trailing no-data batch recomputes the identical relation
-    from sparker_spark.entry_r5 import NO_FINAL_BATCH, _scoped_conf
+    from sparker_spark.entry_r5 import NO_FINAL_BATCH
+    from sparker_spark.session import scoped_conf
 
-    with _scoped_conf(spark, NO_FINAL_BATCH):
+    with scoped_conf(spark, NO_FINAL_BATCH):
         q = (
             regs.writeStream.format("memory")
             .queryName(sink)
@@ -583,9 +584,10 @@ def q_stream_countmin(spark, sf_dir):
     sink = f"stream_cm_sink_{next(_SINK_SEQ)}"
     # complete mode re-emits the full counter table every batch — the
     # trailing no-data batch recomputes the identical relation
-    from sparker_spark.entry_r5 import NO_FINAL_BATCH, _scoped_conf
+    from sparker_spark.entry_r5 import NO_FINAL_BATCH
+    from sparker_spark.session import scoped_conf
 
-    with _scoped_conf(spark, NO_FINAL_BATCH):
+    with scoped_conf(spark, NO_FINAL_BATCH):
         q = (
             counters.writeStream.format("memory")
             .queryName(sink)
@@ -1101,9 +1103,10 @@ def q_stream_sessions(spark, sf_dir):
     # watermark is pinned beyond the data's time range), so the
     # trailing no-data micro-batch emits nothing — skip it instead of
     # paying its state-store load+commit round (entry_r5.NO_FINAL_BATCH)
-    from sparker_spark.entry_r5 import NO_FINAL_BATCH, _scoped_conf
+    from sparker_spark.entry_r5 import NO_FINAL_BATCH
+    from sparker_spark.session import scoped_conf
 
-    with _scoped_conf(spark, NO_FINAL_BATCH):
+    with scoped_conf(spark, NO_FINAL_BATCH):
         q = (
             out.writeStream.format("memory")
             .queryName(sink)

@@ -360,9 +360,10 @@ def q_stream_neardup(spark, sf_dir):
     sink = f"stream_neardup_sink_{next(_SINK_SEQ)}"
     # stateless per-row plan + stream-static join: the trailing
     # no-data batch is a pure planning round
-    from sparker_spark.entry_r5 import NO_FINAL_BATCH, _scoped_conf
+    from sparker_spark.entry_r5 import NO_FINAL_BATCH
+    from sparker_spark.session import scoped_conf
 
-    with _scoped_conf(spark, NO_FINAL_BATCH):
+    with scoped_conf(spark, NO_FINAL_BATCH):
         q = (
             out.writeStream.format("memory")
             .queryName(sink)

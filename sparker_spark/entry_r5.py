@@ -21,12 +21,11 @@ import atexit
 import os
 import shutil
 import tempfile
-from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
 from sparker_spark.rounding import rnd
-from sparker_spark.session import shuffle_partitions
+from sparker_spark.session import scoped_conf, shuffle_partitions
 
 STREAM_WINDOW = "1 hour"
 STREAM_WATERMARK = "2 hours"
@@ -106,30 +105,6 @@ def _stage_copy(path: str, prefix: str) -> str:
     )
 
 
-@contextmanager
-def _scoped_conf(spark, conf: dict[str, str]):
-    """Set session confs for the duration of one streaming gate and
-    restore them after — Structured Streaming captures the session
-    conf at query START, so per-query settings must be scoped around
-    ``.start()`` (there is no per-query conf API for state
-    partitioning)."""
-    old: dict[str, str | None] = {}
-    for k, v in conf.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 # Skip the trailing no-data micro-batch (r13, guide §2/§5): with
 # trigger(availableNow) Spark appends one extra input-less batch whose
 # only purpose is to advance the watermark so event-time timeouts /
@@ -169,9 +144,11 @@ def _stream_state_partitions(
     8 partitions."""
     total = 0
     for d in stage_dirs:
-        for f in os.listdir(d):
-            if not f.startswith((".", "_")):
-                total += os.path.getsize(os.path.join(d, f))
+        for root, _, files in os.walk(d):
+            for f in files:
+                path = os.path.join(root, f)
+                if not f.startswith((".", "_")) and os.path.isfile(path):
+                    total += os.path.getsize(path)
     cap = shuffle_partitions(spark)
     return max(1, min(cap, -(-total // bytes_per_partition)))
 
@@ -221,7 +198,7 @@ def q_stream_exact_dedup(spark, sf_dir):
     sink = f"stream_exact_dedup_sink_{next(_SINK_SEQ)}"
     # dropDuplicates emits each hash on FIRST sight — the no-data
     # batch contributes nothing (see NO_FINAL_BATCH)
-    with _scoped_conf(spark, NO_FINAL_BATCH):
+    with scoped_conf(spark, NO_FINAL_BATCH):
         return _drain(spark, out, sink, "append").select("text_hash")
 
 
@@ -257,7 +234,7 @@ def q_stream_event_windows(spark, sf_dir):
     sink = f"stream_event_windows_sink_{next(_SINK_SEQ)}"
     # complete mode re-emits the FULL aggregate every batch — the
     # no-data batch recomputes the identical relation (NO_FINAL_BATCH)
-    with _scoped_conf(spark, NO_FINAL_BATCH):
+    with scoped_conf(spark, NO_FINAL_BATCH):
         drained = _drain(spark, out, sink, "complete")
     return drained.select(
         "window_start",
@@ -322,7 +299,7 @@ def q_stream_interval_join(spark, sf_dir):
             _stream_state_partitions(spark, ls, rs)
         ),
     }
-    with _scoped_conf(spark, conf):
+    with scoped_conf(spark, conf):
         drained = _drain(spark, out, sink, "append")
     return drained.select(
         "user_id",
@@ -374,7 +351,7 @@ def q_stream_decontaminate(spark, sf_dir):
     sink = f"stream_decon_sink_{next(_SINK_SEQ)}"
     # stateless per-row plan — the no-data batch is a pure planning
     # round (NO_FINAL_BATCH)
-    with _scoped_conf(spark, NO_FINAL_BATCH):
+    with scoped_conf(spark, NO_FINAL_BATCH):
         return _drain(spark, out, sink, "append")
 
 

@@ -256,9 +256,10 @@ def q_stream_span_clean(spark, sf_dir):
     sink = f"stream_spanx_sink_{next(_SINK_SEQ)}"
     # stateless per-row plan — the no-data batch is a pure planning
     # round (NO_FINAL_BATCH)
-    from sparker_spark.entry_r5 import NO_FINAL_BATCH, _scoped_conf
+    from sparker_spark.entry_r5 import NO_FINAL_BATCH
+    from sparker_spark.session import scoped_conf
 
-    with _scoped_conf(spark, NO_FINAL_BATCH):
+    with scoped_conf(spark, NO_FINAL_BATCH):
         return _drain(spark, out, sink, "append")
 
 
@@ -618,9 +619,7 @@ def q_vocab_coverage(spark, sf_dir):
     occurrences the top-N types cover (N = COV_NS, sized to the
     graded corpora's 31-type vocabulary) — the number that sizes a
     tokenizer's vocab budget. Rank is the distributed
-    two-phase global rank (no single-partition window); the output is
-    ONE row, so the rank's internal cache is released after a trivial
-    checkpoint."""
+    two-phase global rank (no single-partition window)."""
     from sparker_spark import ranking
     from sparker_spark.entry import load
     from sparker_spark.rounding import rnd
@@ -644,9 +643,7 @@ def q_vocab_coverage(spark, sf_dir):
                 6,
             ).alias(f"cov_{n}")
         )
-    out = ranked.agg(*aggs).localCheckpoint(eager=True)
-    ranking.release(ranked)
-    return out
+    return ranked.agg(*aggs)
 
 
 def _o_vocab_coverage() -> str:

@@ -965,22 +965,19 @@ class BPEVocab:
                 "token_id"
             ),
         )
-        # materialize BEFORE releasing the rank's internal cache
-        # (release() is only safe after the ranked output exists); the
-        # vocab is model-sized, so the eager checkpoint is trivial.
+        # the vocab is model-sized and every encode_ids call joins to
+        # it, so it is materialized once, as on the byte-level path.
         # Distinct merges can concatenate to the SAME string (('a','bc')
         # and ('ab','c') both yield 'abc') — encode_ids joins on token,
         # so duplicate token rows would duplicate positions; keep ONE
         # row per token (the lowest id, i.e. the earliest rank)
-        out = (
+        return (
             base.select("token", "token_id")
             .unionByName(merged)
             .groupBy("token")
             .agg(F.min("token_id").alias("token_id"))
             .localCheckpoint(eager=True)
         )
-        ranking.release(base)
-        return out
 
     @staticmethod
     def encode_ids(

@@ -12,16 +12,16 @@ registry entry and nothing else.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparker_spark.session import scoped_conf
+
 _ARROW_BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
-@contextmanager
 def arrow_batch_rows(spark: SparkSession, rows: int):
     """Scope ``spark.sql.execution.arrow.maxRecordsPerBatch`` to a
     block, restoring the previous value on exit. The conf is read at
@@ -35,15 +35,8 @@ def arrow_batch_rows(spark: SparkSession, rows: int):
     degrade every later pandas exchange (toPandas, applyInPandas) in
     the session.
     """
-    prev = spark.conf.get(_ARROW_BATCH_CONF, None)
-    spark.conf.set(_ARROW_BATCH_CONF, str(int(rows)))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(_ARROW_BATCH_CONF)
-        else:
-            spark.conf.set(_ARROW_BATCH_CONF, prev)
+    return scoped_conf(spark, {_ARROW_BATCH_CONF: str(int(rows))})
+
 
 # canonical multimodal schema fragments
 MEDIA_META = T.StructType(

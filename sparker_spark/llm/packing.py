@@ -135,10 +135,7 @@ class SequencePacking:
         tokenization plugs in: ``tokenizer`` (a Column -> array
         expression applied to ``text_col``) or ``counts_col`` (a
         precomputed per-document token count — the form an external
-        BPE run hands over). Eagerly materializes the per-document
-        offsets (a 3-long-column relation) so the distributed cumsum's
-        internal cache can be released before returning — repeated
-        pack_plan calls never accumulate pinned session state.
+        BPE run hands over).
 
         ``base_offset``: the stream position the first document starts
         at — the INCREMENTAL-append hook. Packing a new batch with
@@ -171,12 +168,6 @@ class SequencePacking:
             "off",
             F.col("_cum") - F.col("_w") + F.lit(int(base_offset)),
         ).drop("_cum", "_w")
-        # materialize the offsets once (localCheckpoint is GC-freed,
-        # unlike a session-pinned cache), then release the cumsum's
-        # internal cache — the offsets are fixed, so downstream
-        # consumers read the checkpoint and the pin is gone
-        offs = offs.localCheckpoint(eager=True)
-        ranking.release(cum)
         spans = offs.where(F.col("n") > 0).select(
             "doc_id",
             "n",
@@ -450,19 +441,15 @@ def training_order(
     ranking.global_rank (range-partitioned two-phase rank — no
     single-partition window, the shape that survives corpus scale);
     ties on the coordinate (2^-60 probability) break on seq_id.
-    Adds ``shuffle_pos`` (dense, 0-based); internal rank cache is
-    released before returning (GC-freed checkpoint only).
+    Adds ``shuffle_pos`` (dense, 0-based).
     """
     from sparker_spark import ranking
     from sparker_spark.llm.sampling import Sampling
 
     keyed = seqs.withColumn("_coord", Sampling.coord(id_col, seed))
-    ranked = ranking.global_rank(
+    return ranking.global_rank(
         keyed, ["_coord", id_col], out="shuffle_pos"
-    )
-    out = ranked.drop("_coord").localCheckpoint(eager=True)
-    ranking.release(ranked)
-    return out
+    ).drop("_coord")
 
 
 def write_packed_shards(

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparker_spark.ranking import global_topk, release
+from sparker_spark.ranking import global_topk
 from sparker_spark.rounding import rnd
 
 _SPLIT = "[^0-9a-z_]+"
@@ -115,8 +115,6 @@ class TextSearch:
         from pyspark.sql import Window
 
         w = Window.orderBy(F.col("score").desc(), F.col("doc_id"))
-        out = top.select(
+        return top.select(
             "doc_id", "score", F.row_number().over(w).cast("long").alias("rank")
-        ).localCheckpoint(eager=True)
-        release(top)
-        return out
+        )

@@ -88,12 +88,13 @@ class SetSimilarityJoin:
 
         if isinstance(toks.schema["tok"].dataType, StringType):
             vocab = ranking.global_rank(freq, ["tok"], out="tid")
+            # the encoded relation replaces `toks` for both of its
+            # consumers (the ordering below and the verification arrays)
             toks = (
                 toks.join(vocab, "tok")
                 .select("doc_id", F.col("tid").alias("tok"), "df")
                 .localCheckpoint(eager=True)
             )
-            ranking.release(vocab)
             ordered = toks
         else:
             ordered = toks.join(freq, "tok")

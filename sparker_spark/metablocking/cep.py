@@ -19,11 +19,6 @@ for continuous weights (JS, chi², LR scores) the weight histogram has
 one group per edge, so "collect the small histogram" degenerated into
 three full-size shuffles; the range plan costs one, for any weight
 distribution, at any scale.
-
-The pruned result (≤ K edges — bounded by construction) is eagerly
-materialized with ``localCheckpoint`` so the cached edge set can be
-unpersisted before returning: repeated CEP invocations in a long-lived
-session do not accumulate cached partitions.
 """
 
 from __future__ import annotations
@@ -33,7 +28,6 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparker_spark import ranking
 from sparker_spark.blocking.blockers import BlockCollection
 from sparker_spark.metablocking.pruning_utils import WeightTypes
 from sparker_spark.metablocking.weights import EdgeContext, EdgeWeighting
@@ -54,15 +48,9 @@ class CEP:
         # sf0.1): the weighting re-run over the cached block relations
         # is cheaper than writing the full edge relation once. Left
         # unmaterialized deliberately.
-        half = ctx.half()
-        kept = global_topk(
-            half, [("weight", True), ("p1", False), ("p2", False)], int(k)
+        return global_topk(
+            ctx.half(), [("weight", True), ("p1", False), ("p2", False)], int(k)
         )
-        # ≤ K rows by construction — safe to materialize eagerly, which
-        # lets the range-shuffle cache be released before returning
-        out = kept.localCheckpoint(eager=True)
-        ranking.release(kept)
-        return out
 
     @staticmethod
     def cep(

@@ -273,16 +273,18 @@ def _entropy_sum(use_entropy: bool) -> dict[str, Column] | None:
 @dataclass
 class EdgeContext:
     """Everything a pruner needs: the directed weighted edges plus the
-    scalars the reference collects (#blocks, #edges)."""
+    scalars the reference collects (#blocks, Σ block sizes, #edges)."""
 
     edges: DataFrame  # (src LONG, dst LONG, cbs DOUBLE, weight DOUBLE)
     weight_type: str
     num_blocks: int
+    # Σ block_size: an upper bound on #profiles that pruners use for
+    # broadcast guards instead of running an aggregate
+    total_block_size: int
+    # the (profile_id, block_id) membership relation the edges were
+    # built from
+    profiles: DataFrame
     num_edges: int | None = None  # only computed for EJS
-    # the one-row-per-profile relation the edges were built from —
-    # pruners use its (cheap, usually cached) count for broadcast
-    # guards instead of running an aggregate over the edge relation
-    profiles: DataFrame | None = None
     _materialized: bool = False
     # For SYMMETRIC weight types (w(src,dst) == w(dst,src): CBS, JS,
     # ECBS, chi²), the canonical storage is the src <= dst base
@@ -395,7 +397,10 @@ class EdgeWeighting:
         if weight_type not in WeightTypes.ALL:
             raise ValueError(f"invalid weight type: {weight_type}")
 
-        num_blocks = blocks.meta.count()  # len(block_index)
+        sizes = blocks.meta.agg(
+            F.count("*").alias("n"), F.sum("block_size").alias("s")
+        ).first()
+        num_blocks = sizes["n"]  # len(block_index)
         # Symmetric weights (w(src,dst) == w(dst,src)) are computed on
         # the src <= dst base relation only — half the enumeration
         # output ever gets weighted/materialized; the directed view
@@ -428,8 +433,9 @@ class EdgeWeighting:
             edges=_directed(weighted) if symmetric else weighted,
             weight_type=weight_type,
             num_blocks=num_blocks,
-            num_edges=num_edges,
+            total_block_size=sizes["s"] or 0,
             profiles=profile_blocks_filtered,
+            num_edges=num_edges,
             _base=weighted if symmetric else None,
         )
 

@@ -84,33 +84,25 @@ class WNP:
         # path the thresholds are eagerly checkpointed so the two
         # shuffled join legs don't each recompute the aggregate.
         thresholds = WNP.calc_thresholds(ctx, threshold_type)
-        # guard count = #distinct profiles (the thresholds relation's
-        # true size). ctx.profiles is the MEMBERSHIP relation (one row
-        # per profile/block pair, cached in every flow) — a plain
-        # count() overstates #profiles by the avg-blocks-per-profile
-        # factor and wrongly kicks mid-size corpora off the broadcast
-        # plan; an approximate distinct over the cached relation is a
-        # single narrow pass and the guard doesn't need exactness.
-        if ctx.profiles is not None:
-            # membership rows >= distinct profiles, so a cheap count()
-            # of the cached relation decides the common small case
-            # without the distinct aggregate
-            n_profiles = ctx.profiles.count()
-            if n_profiles > WNP.BROADCAST_THRESHOLDS_MAX:
-                # approx_count_distinct's ~5 % rsd can UNDERestimate a
-                # just-over-the-limit relation; shrink the effective
-                # threshold on this path so estimator error can't
-                # admit an oversized broadcast (a false negative only
-                # costs the shuffled plan, which is correct anyway)
-                n_profiles = ctx.profiles.agg(
-                    F.approx_count_distinct("profile_id").alias("n")
-                ).first()["n"]
-                small = n_profiles <= 0.9 * WNP.BROADCAST_THRESHOLDS_MAX
-            else:
-                small = True
-        else:
-            n_profiles = thresholds.count()
-            small = n_profiles <= WNP.BROADCAST_THRESHOLDS_MAX
+        # guard size = #distinct profiles (the thresholds relation's
+        # true size). Every profile with an edge sits in at least one
+        # block, so Σ block_size (collected with #blocks, no extra
+        # job) bounds it from above and decides the common small case.
+        # Σ block_size overstates #profiles by the avg-blocks-per-
+        # profile factor, so above the cap an approximate distinct
+        # over the membership relation refines it; the guard doesn't
+        # need exactness.
+        small = ctx.total_block_size <= WNP.BROADCAST_THRESHOLDS_MAX
+        if not small:
+            # approx_count_distinct's ~5 % rsd can UNDERestimate a
+            # just-over-the-limit relation; shrink the effective
+            # threshold on this path so estimator error can't admit an
+            # oversized broadcast (a false negative only costs the
+            # shuffled plan, which is correct anyway)
+            n_profiles = ctx.profiles.agg(
+                F.approx_count_distinct("profile_id").alias("n")
+            ).first()["n"]
+            small = n_profiles <= 0.9 * WNP.BROADCAST_THRESHOLDS_MAX
         # t1/t2 are independent plan legs, so on the broadcast path the
         # threshold aggregate runs once per build. That is only safe
         # when the aggregate is merge-order-invariant: MAX is, and AVG

@@ -9,60 +9,73 @@ distributed plan: range-repartition on the sort key (total order
 across partitions), rank locally per partition, then add each
 partition's cumulative row-count offset (a tiny driver-side list —
 #partitions entries, same class of scalar as a purging threshold).
+``global_cumsum`` and ``global_topk`` share that range-offset core
+(:func:`_range_offsets`).
 
 The result is bit-identical to the single-partition window for any
 total ordering (ties impossible when the sort key set is unique per
 row): range partition boundaries only decide WHERE a row is ranked,
 never its rank.
+
+Materialization: the range-partitioned input is pinned with a lazy
+``localCheckpoint`` that the returned DataFrame owns — nothing is
+registered with the session's cache, there is nothing for a caller to
+release, and the checkpointed partitions are freed when the result is
+garbage-collected.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def global_rank(
-    df: DataFrame, cols: list[str], out: str = "pos", num_partitions: int | None = None
-) -> DataFrame:
+def _range_offsets(
+    df: DataFrame, key: list[Column], total: Column
+) -> tuple[DataFrame, dict, Column]:
+    """Range-partition ``df`` on ``key`` and tag each row with its
+    partition id ``_pid``. Returns the pinned partitions, the
+    ``{_pid: (start, end)}`` running-``total`` span of every non-empty
+    partition, and each row's partition start as a column."""
+    parts = (
+        df.repartitionByRange(*key)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=False)
+    )
+    # The checkpoint is load-bearing: range boundaries are fixed at
+    # shuffle time, and both the collected spans and every later read
+    # of `parts` see the same stored partitions, so the offsets stay
+    # consistent with the rows they are added to.
+    rows = parts.groupBy("_pid").agg(total.alias("_t")).orderBy("_pid").collect()
+    spans = {}
+    acc = 0
+    for r in rows:
+        spans[r["_pid"]] = (acc, acc + r["_t"])
+        acc += r["_t"]
+    # empty input -> no spans; create_map() with zero entries is a
+    # VOID-keyed map that fails analysis, so fall back to a 0 literal
+    start = (
+        F.create_map(
+            *[x for pid, (s, _) in spans.items() for x in (F.lit(pid), F.lit(s))]
+        )[F.col("_pid")]
+        if spans
+        else F.lit(0)
+    )
+    return parts, spans, start
+
+
+def global_rank(df: DataFrame, cols: list[str], out: str = "pos") -> DataFrame:
     """Add ``out`` = dense 0-based global rank of each row under
     ORDER BY *cols* (which must form a total order — make the last
     column a unique tiebreaker)."""
     key = [F.col(c) for c in cols]
-    parts = df.repartitionByRange(*key) if num_partitions is None else (
-        df.repartitionByRange(num_partitions, *key)
-    )
-    parts = parts.withColumn("_pid", F.spark_partition_id()).cache()
-    counts = (
-        parts.groupBy("_pid").agg(F.count("*").alias("_n")).orderBy("_pid").collect()
-    )
-    offsets = {}
-    acc = 0
-    for r in counts:
-        offsets[r["_pid"]] = acc
-        acc += r["_n"]
-    # empty input -> no offsets; create_map() with zero entries is a
-    # VOID-keyed map that fails analysis, so fall back to a 0 literal
-    off_expr = (
-        F.create_map(
-            *[x for pid, o in offsets.items() for x in (F.lit(pid), F.lit(o))]
-        )[F.col("_pid")]
-        if offsets
-        else F.lit(0)
-    )
+    parts, _, start = _range_offsets(df, key, F.count("*"))
     w = Window.partitionBy("_pid").orderBy(*key)
-    ranked = (
+    return (
         parts.withColumn("_local", F.row_number().over(w) - 1)
-        .withColumn(out, (off_expr + F.col("_local")).cast("long"))
+        .withColumn(out, (start + F.col("_local")).cast("long"))
         .drop("_pid", "_local")
     )
-    # The cache on `parts` is load-bearing: range boundaries are fixed
-    # at shuffle time, so cached reads (and evicted-partition
-    # recomputes, which reuse the same shuffle output) stay consistent
-    # with the collected offsets. Callers that materialize the ranked
-    # output elsewhere can free it with release().
-    ranked._gr_cache = parts
-    return ranked
 
 
 def global_cumsum(
@@ -82,40 +95,20 @@ def global_cumsum(
     must form a total order per row group (rows with equal keys land
     in one partition, so their relative cumsum order within the key is
     partition-local — pass unique keys, e.g. a histogram's level
-    column). Internal cache: free with :func:`release` once the
-    output is materialized.
+    column).
     """
     key = [F.col(c).desc() if descending else F.col(c) for c in cols]
-    parts = df.repartitionByRange(*key).withColumn(
-        "_pid", F.spark_partition_id()
-    ).cache()
-    totals = (
-        parts.groupBy("_pid").agg(F.sum(value).alias("_s")).orderBy("_pid").collect()
-    )
-    offsets = {}
-    acc = 0
-    for r in totals:
-        offsets[r["_pid"]] = acc
-        acc += r["_s"]
-    off_expr = (
-        F.create_map(
-            *[x for pid, o in offsets.items() for x in (F.lit(pid), F.lit(o))]
-        )[F.col("_pid")]
-        if offsets
-        else F.lit(0)
-    )
+    parts, _, start = _range_offsets(df, key, F.sum(value))
     w = (
         Window.partitionBy("_pid")
         .orderBy(*key)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    cum = (
+    return (
         parts.withColumn("_local", F.sum(value).over(w))
-        .withColumn(out, off_expr + F.col("_local"))
+        .withColumn(out, start + F.col("_local"))
         .drop("_pid", "_local")
     )
-    cum._gr_cache = parts
-    return cum
 
 
 def global_topk(
@@ -141,43 +134,18 @@ def global_topk(
     if k <= 0:
         return df.limit(0)
     key = [F.col(c).desc() if d else F.col(c) for c, d in order]
-    parts = df.repartitionByRange(*key).withColumn(
-        "_pid", F.spark_partition_id()
-    ).cache()
-    counts = (
-        parts.groupBy("_pid").agg(F.count("*").alias("_n")).orderBy("_pid").collect()
-    )
-    acc = 0
-    boundary_pid = None
-    boundary_keep = 0
-    for r in counts:
-        if acc + r["_n"] >= k:
-            boundary_pid = r["_pid"]
-            boundary_keep = k - acc
-            break
-        acc += r["_n"]
-    if boundary_pid is None:
+    parts, spans, _ = _range_offsets(df, key, F.count("*"))
+    boundary = [(pid, s) for pid, (s, e) in spans.items() if s < k <= e]
+    if not boundary:
         # fewer than k rows: everything survives
-        out = parts.drop("_pid")
-        out._gr_cache = parts
-        return out
+        return parts.drop("_pid")
+    boundary_pid, preceding = boundary[0]
     whole = parts.where(F.col("_pid") < F.lit(boundary_pid))
     w = Window.partitionBy("_pid").orderBy(*key)
     edge = (
         parts.where(F.col("_pid") == F.lit(boundary_pid))
         .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= F.lit(int(boundary_keep)))
+        .where(F.col("_rn") <= F.lit(int(k - preceding)))
         .drop("_rn")
     )
-    out = whole.unionByName(edge).drop("_pid")
-    out._gr_cache = parts
-    return out
-
-
-def release(df: DataFrame) -> None:
-    """Unpersist the internal cache of a ``global_rank`` result. Safe to
-    call only after the ranked output has been materialized (or is no
-    longer needed) — the ranks themselves were fixed at shuffle time."""
-    cache = getattr(df, "_gr_cache", None)
-    if cache is not None:
-        cache.unpersist()
+    return whole.unionByName(edge).drop("_pid")

@@ -11,8 +11,14 @@ paths, and a shuffle-partition count that AQE coalesces downward.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+# serializes scoped_conf blocks: session conf is shared by every thread
+# that holds the session
+_CONF_LOCK = threading.RLock()
 
 
 def get_spark(
@@ -58,3 +64,26 @@ def shuffle_partitions(spark: SparkSession) -> int:
     except (TypeError, ValueError):
         par = 0
     return par if par > 0 else spark.sparkContext.defaultParallelism
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set session confs for the duration of a block and restore them
+    after, also on an exception; a key that was unset before is unset
+    again. Session conf is global to the session, so blocks from
+    different threads run one at a time (interleaved set/restore pairs
+    would leave one thread's value behind); blocks nest within a
+    thread. Wrap the ACTION, not the DataFrame definition: Spark reads
+    most confs when a query runs."""
+    with _CONF_LOCK:
+        old = {k: spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in old.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)

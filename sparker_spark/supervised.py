@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sparker_spark import ranking
 from sparker_spark.ranking import global_topk
 
 # the notebook's feature set (examples/Generalized Supervised
@@ -150,21 +149,16 @@ class SupervisedMB:
         Same physical plan as unsupervised CEP (``ranking.global_topk``
         — one range shuffle, partition-local sort only at the
         K-boundary). p_match is continuous, so a score histogram would
-        have one group per edge; the range plan is distribution-blind.
-        The ≤ K-row result is eagerly materialized so the shuffle cache
-        can be released (no cache accumulation across invocations)."""
+        have one group per edge; the range plan is distribution-blind."""
         k = int(total_block_size / 2)
         # materialize the thresholded subset once: global_topk's range
         # repartition samples its input for boundaries and then
         # shuffles it — two executions of the scoring lineage without
         # a checkpoint
         over_t = edges.filter("p_match >= 0.5").localCheckpoint(eager=True)
-        kept = global_topk(
+        return global_topk(
             over_t, [("p_match", True), ("p1", False), ("p2", False)], k
         )
-        out = kept.localCheckpoint(eager=True)
-        ranking.release(kept)
-        return out
 
     @staticmethod
     def wep(edges: DataFrame) -> DataFrame:

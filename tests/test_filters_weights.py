@@ -7,8 +7,10 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from sparker_spark.attribute_clustering import AttributeClustering
 from sparker_spark.blocking.blockers import Blocking
 from sparker_spark.blocking.converters import Converters
+from sparker_spark.blocking.strategies import BlockingKeysStrategies
 from sparker_spark.evaluation import Evaluation
 from sparker_spark.filters import BlockFiltering, BlockPurging
 from sparker_spark.metablocking.cep import CEP
@@ -25,7 +27,7 @@ from sparker_spark.wrappers import DataFrameWrapper
 
 
 @pytest.fixture(scope="module")
-def blocks(spark):
+def records(spark):
     """5 dirty profiles sharing tokens:
       t1: {0,1,2}   t2: {0,1}   t3: {2,3}   t4: {3,4}   t5: {0,4}
     """
@@ -36,8 +38,12 @@ def blocks(spark):
         ("p3", "t3 t4"),
         ("p4", "t4 t5"),
     ]
-    df = spark.createDataFrame(rows, ["id", "text"])
-    profiles = DataFrameWrapper.load_profiles(df, real_id_field="id")
+    return spark.createDataFrame(rows, ["id", "text"])
+
+
+@pytest.fixture(scope="module")
+def blocks(records):
+    profiles = DataFrameWrapper.load_profiles(records, real_id_field="id")
     return Blocking.create_blocks(profiles).cache()
 
 
@@ -297,3 +303,42 @@ def test_wnp_large_path_matches_broadcast_path(blocks):
     finally:
         WNP.BROADCAST_THRESHOLDS_MAX = old
     assert blast_large == blast_small
+
+
+def test_public_chains_leave_no_cached_relation(spark, records):
+    """The dirty WNP chain and the BLAST chain, run end to end through
+    the public API, leave nothing in the session's CacheManager: every
+    materialization on the way is owned by the relation that needs it
+    and freed with it."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+
+    profiles = DataFrameWrapper.load_profiles(records, real_id_field="id")
+    keys = BlockingKeysStrategies.token_blocking(profiles)
+    blocks = Blocking.blocks_from_keys(keys)
+    purged = BlockPurging.block_purging(blocks, 1.025)
+    _, filtered, rebuilt = BlockFiltering.block_filtering_quick(purged, 0.8)
+    ctx = EdgeWeighting.weighted_edges(rebuilt, filtered, WeightTypes.CBS)
+    pairs = WNP.prune(ctx, ThresholdTypes.AVG, ComparisonTypes.OR)
+    pairs.write.format("noop").mode("overwrite").save()
+    assert cm.isEmpty()
+
+    # two sources, the second with its attribute renamed
+    a = DataFrameWrapper.load_profiles(records, real_id_field="id", source_id=0)
+    b = DataFrameWrapper.load_profiles(
+        records.withColumnRenamed("text", "body"),
+        real_id_field="id",
+        source_id=1,
+        start_id_from=5,
+    )
+    two = a.unionByName(b)
+    clusters = AttributeClustering.cluster_similar_attributes(two)
+    blocks = Blocking.create_blocks_clusters(two, clusters, clean=True)
+    purged = BlockPurging.block_purging(blocks, 1.005)
+    _, filtered, rebuilt = BlockFiltering.block_filtering_quick(purged, 0.8)
+    ctx = EdgeWeighting.weighted_edges(
+        rebuilt, filtered, WeightTypes.CHI_SQUARE, use_entropy=True
+    )
+    pairs = WNP.prune(ctx, chi2divider=2.0)
+    assert pairs.count() > 0
+    assert cm.isEmpty()

@@ -4,19 +4,16 @@ single-partition window" claim rests on (sparker_spark/ranking.py).
 
 Each property compares against the trivially-correct single-machine
 formulation on randomized inputs, including adversarial duplicates and
-skew that hand-written fixtures tend to miss.
+skew that hand-written fixtures tend to miss. Each also checks that
+the primitive's result owns its materialization: nothing is left in
+the session's CacheManager once the result is consumed.
 """
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from sparker_spark.ranking import (
-    global_cumsum,
-    global_rank,
-    global_topk,
-    release,
-)
+from sparker_spark.ranking import global_cumsum, global_rank, global_topk
 
 ROWS = st.lists(
     st.tuples(
@@ -34,6 +31,15 @@ _SETTINGS = dict(
 )
 
 
+@pytest.fixture(autouse=True)
+def _empty_cache(spark):
+    spark.catalog.clearCache()
+
+
+def _cache_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 @given(rows=ROWS)
 @settings(**_SETTINGS)
 def test_global_rank_matches_sorted_enumeration(spark, rows):
@@ -44,7 +50,7 @@ def test_global_rank_matches_sorted_enumeration(spark, rows):
     )
     ranked = global_rank(df, ["a", "b"], out="pos")
     got = {(r["a"], r["b"]): r["pos"] for r in ranked.collect()}
-    release(ranked)
+    assert _cache_empty(spark)
     want = {t: i for i, t in enumerate(rows)}
     assert got == want
 
@@ -60,7 +66,7 @@ def test_global_topk_matches_sort_limit(spark, rows, k):
     # partitioner's key construction
     out = global_topk(df, [("a", True), ("b", False)], k)
     got = sorted((r["a"], r["b"]) for r in out.collect())
-    release(out)
+    assert _cache_empty(spark)
     want = sorted(sorted(rows, key=lambda t: (-t[0], t[1]))[:k])
     assert got == want
 
@@ -74,7 +80,7 @@ def test_global_cumsum_matches_running_total(spark, rows, desc):
     )
     out = global_cumsum(df, ["a", "b"], value="b", out="cum", descending=desc)
     got = {(r["a"], r["b"]): r["cum"] for r in out.collect()}
-    release(out)
+    assert _cache_empty(spark)
     ordered = sorted(rows, reverse=desc)
     acc, want = 0, {}
     for a, b in ordered:
@@ -90,7 +96,7 @@ def test_global_topk_all_ties_single_value(spark):
     df = spark.createDataFrame(rows, "a long, b long")
     out = global_topk(df, [("a", True), ("b", False)], 13)
     got = sorted((r["a"], r["b"]) for r in out.collect())
-    release(out)
+    assert _cache_empty(spark)
     assert got == [(7, i) for i in range(13)]
 
 
@@ -100,6 +106,6 @@ def test_global_topk_boundary_k(spark, k):
     df = spark.createDataFrame(rows, "a long, b long")
     out = global_topk(df, [("a", False), ("b", False)], k)
     got = sorted((r["a"], r["b"]) for r in out.collect())
-    release(out)
+    assert _cache_empty(spark)
     want = sorted(sorted(rows)[:k])
     assert got == want
