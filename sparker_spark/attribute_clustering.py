@@ -64,23 +64,6 @@ def band_chunks(num_hashes: int, target_threshold: float) -> list[tuple[int, int
 
 class AttributeClustering:
     @staticmethod
-    def attribute_tokens(profiles: DataFrame) -> DataFrame:
-        """(attr_key, token) distinct, attr_key = '{source_id}_{attr}'
-        (attribute_clustering.py:127-140)."""
-        return (
-            profiles.select(
-                F.concat(F.col("source_id"), F.lit("_"), F.col("attr")).alias(
-                    "attr_key"
-                ),
-                F.explode(
-                    F.split(F.lower(F.col("value")), TOKEN_SPLIT_RE)
-                ).alias("token"),
-            )
-            .where(F.length("token") > 0)
-            .distinct()
-        )
-
-    @staticmethod
     def signatures(
         tokens: DataFrame, num_hashes: int = 128, seed: int = 1234
     ) -> DataFrame:
@@ -278,6 +261,8 @@ class AttributeClustering:
         """End-to-end BLAST attribute clustering
         (attribute_clustering.py:95-328). Returns KeysCluster-like
         dicts consumable by Blocking.create_blocks_clusters."""
+        # (attr_key, token), attr_key = '{source_id}_{attr}'
+        # (attribute_clustering.py:127-140)
         tokens_all = profiles.select(
             F.concat(F.col("source_id"), F.lit("_"), F.col("attr")).alias(
                 "attr_key"

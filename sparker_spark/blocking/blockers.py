@@ -78,14 +78,13 @@ class Blocking:
     def blocks_from_keys(
         keys: DataFrame,
         clean: bool = False,
-        entropies: DataFrame | None = None,
         assign_ids: bool = True,
     ) -> BlockCollection:
         """Invert (profile → keys) to blocks and compute per-block stats.
 
-        ``keys``: (profile_id, source_id, key) distinct rows.
-        ``entropies``: optional (key, entropy, cluster_id) for
-        loose-schema blocking (B7).
+        ``keys``: (profile_id, source_id, key) distinct rows. Blocks
+        get entropy 1.0 and cluster_id -1; loose-schema blocking
+        (:meth:`create_blocks_clusters`) sets its own.
         """
         if clean:
             # per (key, source) profile counts -> per-key stats: the
@@ -139,14 +138,9 @@ class Blocking:
             # risk and is the default.
             meta = meta.withColumn("block_id", F.xxhash64("key"))
 
-        if entropies is not None:
-            meta = meta.join(entropies, "key", "left").fillna(
-                {"entropy": 1.0, "cluster_id": -1}
-            )
-        else:
-            meta = meta.withColumn("entropy", F.lit(1.0)).withColumn(
-                "cluster_id", F.lit(-1)
-            )
+        meta = meta.withColumn("entropy", F.lit(1.0)).withColumn(
+            "cluster_id", F.lit(-1)
+        )
 
         meta = meta.select(
             "block_id",

@@ -157,29 +157,13 @@ def curate(
     if min_lm_logprob is not None or lm_floor_quantile is not None:
         from sparker_spark.llm.text import LanguageModelScore
 
-        scorer = {
-            2: LanguageModelScore.bigram_logprob,
-            3: LanguageModelScore.trigram_logprob,
-            # KenLM-faithful order (Wenzek et al. 2020): 5-gram
-            # Jelinek-Mercer interpolation, never zero, no OOV holes.
-            # COUNT PRUNING IS ON BY DEFAULT (lm_prune_min_count=2,
-            # lm_prune_from=3): CCNet trains its KenLM with singleton
-            # pruning at the high orders (`--prune 0 0 1`), and the
-            # pruned scorer is measured 2.5-2.6x faster with ~95%
-            # less order-5 state at every SF — the production config.
-            # lm_prune_min_count=1 restores the exact unpruned LM.
-            5: lambda d: LanguageModelScore.interpolated_logprob(
-                d,
-                5,
-                prune_min_count=int(lm_prune_min_count),
-                prune_from=int(lm_prune_from),
-            ),
-        }[int(lm_order)]
         # materialize the score relation ONCE (r12): it is doc-sized
         # (two columns) but its lineage is the whole LM join pyramid,
         # and both the quantile action and the filter join consume it
         lm = (
-            scorer(docs)
+            LanguageModelScore.by_order(
+                docs, lm_order, lm_prune_min_count, lm_prune_from
+            )
             .select("doc_id", "avg_logprob")
             .localCheckpoint(eager=True)
         )

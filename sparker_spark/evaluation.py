@@ -25,6 +25,15 @@ class ERStats:
     num_matches: int
     num_gt: int
 
+    @classmethod
+    def of(cls, num_matches: int, num_edges: int, num_gt: int) -> "ERStats":
+        """PC = matches / groundtruth, PQ = matches / candidate edges,
+        F1 their harmonic mean; an empty denominator gives 0."""
+        pc = num_matches / num_gt if num_gt else 0.0
+        pq = num_matches / num_edges if num_edges else 0.0
+        f1 = 2 * pc * pq / (pc + pq) if (pc + pq) > 0 else 0.0
+        return cls(pc, pq, f1, num_edges, num_matches, num_gt)
+
 
 class Evaluation:
     @staticmethod
@@ -33,10 +42,7 @@ class Evaluation:
         num_edges = edges.count()
         num_gt = gt.count()
         num_matches = edges.select("p1", "p2").join(gt, ["p1", "p2"], "left_semi").count()
-        pc = num_matches / num_gt if num_gt else 0.0
-        pq = num_matches / num_edges if num_edges else 0.0
-        f1 = 2 * pc * pq / (pc + pq) if (pc + pq) > 0 else 0.0
-        return ERStats(pc, pq, f1, num_edges, num_matches, num_gt)
+        return ERStats.of(num_matches, num_edges, num_gt)
 
     @staticmethod
     def get_stats_broadcast(edges: DataFrame, gt: DataFrame) -> ERStats:
@@ -82,10 +88,7 @@ class Evaluation:
         num_matches = int(agg["h"] or 0)
         num_edges = int(agg["t"] or 0)
         num_gt = len(gt_set)
-        pc = num_matches / num_gt if num_gt else 0.0
-        pq = num_matches / num_edges if num_edges else 0.0
-        f1 = 2 * pc * pq / (pc + pq) if (pc + pq) > 0 else 0.0
-        return ERStats(pc, pq, f1, num_edges, num_matches, num_gt)
+        return ERStats.of(num_matches, num_edges, num_gt)
 
     @staticmethod
     def block_collection_stats(blocks: BlockCollection, gt: DataFrame) -> ERStats:
@@ -97,10 +100,7 @@ class Evaluation:
         num_edges = pairs.count()
         num_gt = gt.count()
         num_matches = pairs.join(gt, ["p1", "p2"], "left_semi").count()
-        pc = num_matches / num_gt if num_gt else 0.0
-        pq = num_matches / num_edges if num_edges else 0.0
-        f1 = 2 * pc * pq / (pc + pq) if (pc + pq) > 0 else 0.0
-        return ERStats(pc, pq, f1, num_edges, num_matches, num_gt)
+        return ERStats.of(num_matches, num_edges, num_gt)
 
 
 class StatisticsEstimator:
@@ -147,10 +147,7 @@ class StatisticsEstimator:
         )
         num_matches = cand.intersect(gtp).count()
         num_gt = gtp.count()
-        pc = num_matches / num_gt if num_gt else 0.0
-        pq = num_matches / num_candidates if num_candidates else 0.0
-        f1 = 2 * pc * pq / (pc + pq) if (pc + pq) > 0 else 0.0
-        return ERStats(pc, pq, f1, num_candidates, num_matches, num_gt)
+        return ERStats.of(num_matches, num_candidates, num_gt)
 
     @staticmethod
     def estimate_pc_pq_adjacency(edges: DataFrame, gt: DataFrame) -> ERStats:
@@ -190,10 +187,7 @@ class StatisticsEstimator:
             .distinct()
             .count()
         )
-        pc = num_matches / num_gt if num_gt else 0.0
-        pq = num_matches / num_candidates if num_candidates else 0.0
-        f1 = 2 * pc * pq / (pc + pq) if (pc + pq) > 0 else 0.0
-        return ERStats(pc, pq, f1, num_candidates, num_matches, num_gt)
+        return ERStats.of(num_matches, num_candidates, num_gt)
 
     @staticmethod
     def block_entropy(blocks: BlockCollection, normalized: bool = False) -> DataFrame:

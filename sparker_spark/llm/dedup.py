@@ -526,6 +526,14 @@ class Dedup:
         )
 
 
+def _join_salts(num_cells: int, partitions: int) -> int:
+    """Salts for the within-cell candidate join of
+    :meth:`SemanticDedup.pairs`: enough that ``num_cells * salts``
+    gives about four join keys per shuffle partition (ceil), so 1 —
+    no salting — whenever the cells alone are that many."""
+    return -(-4 * partitions // num_cells)
+
+
 class SemanticDedup:
     """Embedding-space near-duplicate removal (the SemDeDup shape,
     Abbas et al. 2023 "SemDeDup: Data-efficient learning at web-scale
@@ -691,7 +699,7 @@ class SemanticDedup:
         join_keys = ["cell"]
         spark = embeddings.sparkSession
         par = shuffle_partitions(spark)
-        n_salts = -(-4 * par // index.num_cells)  # ceil: ~4 keys/core
+        n_salts = _join_salts(index.num_cells, par)
         if n_salts > 1:
             a = a.withColumn(
                 "salt",

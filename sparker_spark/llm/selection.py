@@ -338,24 +338,9 @@ class PerplexityPartition:
         sort; the tercile state per language is two scalars."""
         from sparker_spark.llm.text import LanguageModelScore
 
-        scorer = {
-            2: LanguageModelScore.bigram_logprob,
-            3: LanguageModelScore.trigram_logprob,
-            # KenLM-faithful order (Wenzek et al. 2020): 5-gram JM
-            # with COUNT PRUNING ON BY DEFAULT (prune_min_count=2,
-            # prune_from=3 — CCNet trains its KenLM with singleton
-            # pruning at the high orders, `--prune 0 0 1`; the pruned
-            # scorer is measured 2.5-2.6x faster with ~95% less
-            # order-5 state at every SF). prune_min_count=1 restores
-            # the exact unpruned LM.
-            5: lambda d: LanguageModelScore.interpolated_logprob(
-                d,
-                5,
-                prune_min_count=prune_min_count,
-                prune_from=prune_from,
-            ),
-        }[int(order)]
-        scored = scorer(documents).join(
+        scored = LanguageModelScore.by_order(
+            documents, order, prune_min_count, prune_from
+        ).join(
             documents.select("doc_id", F.col(lang_col).alias("lang")),
             "doc_id",
         )

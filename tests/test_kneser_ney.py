@@ -150,3 +150,12 @@ def test_kn_short_docs_produce_no_row(spark):
     df = spark.createDataFrame(DOCS, ["doc_id", "text"])
     got = {r["doc_id"] for r in LanguageModelScore.kneser_ney_logprob(df, 5).collect()}
     assert 5 not in got  # "tiny" has one token
+
+
+def test_kn_leaves_no_cached_relation(spark):
+    """The scorer's intermediates are owned by its result: nothing is
+    left registered with the session cache once it is collected."""
+    spark.catalog.clearCache()
+    df = spark.createDataFrame(DOCS, ["doc_id", "text"])
+    assert LanguageModelScore.kneser_ney_logprob(df, 3).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -173,3 +173,31 @@ def test_interpolated_rejects_unigram_order(spark):
     df = spark.createDataFrame([(0, "a b")], "doc_id long, text string")
     with pytest.raises(ValueError):
         LanguageModelScore.interpolated_logprob(df, 1)
+
+
+@pytest.mark.parametrize(
+    "score",
+    [
+        LanguageModelScore.unigram_logprob,
+        LanguageModelScore.bigram_logprob,
+        LanguageModelScore.trigram_logprob,
+        lambda d: LanguageModelScore.interpolated_logprob(d, 5),
+        lambda d: LanguageModelScore.interpolated_logprob(
+            d, 5, prune_min_count=2
+        ),
+    ],
+    ids=["unigram", "bigram", "trigram", "jm5", "jm5_pruned"],
+)
+def test_scorers_leave_no_cached_relation(spark, score):
+    """Each scorer's intermediates are owned by its result: nothing is
+    left registered with the session cache once it is collected."""
+    spark.catalog.clearCache()
+    docs = {
+        0: "the cat sat on the mat and the cat ran",
+        1: "the dog sat on the log and the dog ran far away",
+    }
+    df = spark.createDataFrame(
+        list(docs.items()), "doc_id long, text string"
+    )
+    assert score(df).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
