@@ -41,26 +41,52 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparker_spark.blocking.strategies import BlockingKeysStrategies
-from sparker_spark.ranking import global_rank
+from sparker_spark.ranking import global_rank_count
+from sparker_spark.session import broadcast_threshold
 
 
 @dataclass
 class BlockCollection:
-    """A blocking collection: exploded assignments + per-block meta."""
+    """A blocking collection: exploded assignments + per-block meta.
+
+    ``num_blocks`` is not set by users: it is an upper bound on the
+    number of rows of ``meta`` (#blocks), or None when no stage knows
+    one. ``Blocking.blocks_from_keys`` sets it to the exact count that
+    its dense-id ranking collects anyway (``global_rank_count``);
+    cluster blocking, purging and filtering's rebuild only drop blocks,
+    so they pass it through. Hash ids (``assign_ids=False``), LSH,
+    incremental and hand-built collections leave it None. Only the
+    joins against the block index read it (:func:`block_index`), to
+    broadcast the index when it fits; no result depends on it."""
 
     assignments: DataFrame  # (block_id, key, profile_id, source_id)
     meta: DataFrame  # (block_id, key, block_size, num_sources, comparisons, entropy, cluster_id)
     clean: bool  # True = clean-clean (multi-source), False = dirty
+    num_blocks: int | None = None  # upper bound on #blocks, see above
 
-    def cache(self) -> "BlockCollection":
-        self.assignments.cache()
-        self.meta.cache()
-        return self
 
-    def unpersist(self) -> "BlockCollection":
-        self.assignments.unpersist()
-        self.meta.unpersist()
-        return self
+# Spark's default per-value size estimates (DataType.defaultSize) by
+# type name; a row adds an 8-byte header (EstimationUtils.getSizePerRow)
+_DEFAULT_SIZE = {"integer": 4, "long": 8, "double": 8, "string": 20}
+
+
+def block_index(index: DataFrame, num_blocks: int | None) -> DataFrame:
+    """``index`` — a projection of a block meta relation with at most
+    ``num_blocks`` rows — as the build side of a join against it.
+
+    A ranked meta is a checkpoint, and a checkpoint carries Spark's
+    plan estimate (gigabytes) rather than its size, so Catalyst never
+    broadcasts it on its own. Broadcast-hint it when the bound times
+    the estimated row width is within
+    ``spark.sql.autoBroadcastJoinThreshold``; with no bound or no
+    threshold (-1) the plan is left to Catalyst."""
+    threshold = broadcast_threshold(index.sparkSession)
+    if num_blocks is None or threshold is None:
+        return index
+    width = 8 + sum(
+        _DEFAULT_SIZE.get(f.dataType.typeName(), 8) for f in index.schema
+    )
+    return F.broadcast(index) if num_blocks * width <= threshold else index
 
 
 def comparisons_expr(clean: bool):
@@ -120,12 +146,13 @@ class Blocking:
 
         meta = stats.withColumn("comparisons", comparisons_expr(clean))
 
+        num_blocks = None
         if assign_ids:
             # Distributed dense ids: global_rank (range repartition +
             # per-partition rank + offsets) — identical values to a
             # 1-based row_number() OVER (ORDER BY key) but never a
             # single-partition window. Proportional to #blocks.
-            meta = global_rank(meta, ["key"], out="block_id")
+            meta, num_blocks = global_rank_count(meta, ["key"], out="block_id")
             meta = meta.withColumn("block_id", (F.col("block_id") + 1).cast("long"))
         else:
             # xxhash64(key) ids: one 64-bit hash per distinct key. The
@@ -153,10 +180,12 @@ class Blocking:
         )
 
         assignments = keys.join(
-            meta.select("block_id", "key"), "key"
+            block_index(meta.select("block_id", "key"), num_blocks), "key"
         ).select("block_id", "key", "profile_id", "source_id")
 
-        return BlockCollection(assignments=assignments, meta=meta, clean=clean)
+        return BlockCollection(
+            assignments=assignments, meta=meta, clean=clean, num_blocks=num_blocks
+        )
 
     @staticmethod
     def create_blocks(
@@ -346,4 +375,5 @@ class Blocking:
                 "cluster_id",
             ),
             clean=clean,
+            num_blocks=coll.num_blocks,
         )

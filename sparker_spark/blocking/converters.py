@@ -8,7 +8,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparker_spark.blocking.blockers import BlockCollection, comparisons_expr
+from sparker_spark.blocking.blockers import (
+    BlockCollection,
+    block_index,
+    comparisons_expr,
+)
 
 
 class Converters:
@@ -22,7 +26,10 @@ class Converters:
         consume it directly.
         """
         return blocks.assignments.join(
-            blocks.meta.select("block_id", "comparisons"), "block_id"
+            block_index(
+                blocks.meta.select("block_id", "comparisons"), blocks.num_blocks
+            ),
+            "block_id",
         ).select("profile_id", "source_id", "block_id", "comparisons")
 
     @staticmethod
@@ -66,7 +73,10 @@ class Converters:
             stats.withColumn("comparisons", comparisons_expr(blocks.clean))
             .where(F.col("comparisons") > 0)
             .join(
-                blocks.meta.select("block_id", "key", "entropy", "cluster_id"),
+                block_index(
+                    blocks.meta.select("block_id", "key", "entropy", "cluster_id"),
+                    blocks.num_blocks,
+                ),
                 "block_id",
             )
             .select(
@@ -81,10 +91,18 @@ class Converters:
         )
         assignments = (
             profile_blocks.select("block_id", "profile_id", "source_id")
-            .join(meta.select("block_id", "key"), "block_id")
+            .join(
+                block_index(meta.select("block_id", "key"), blocks.num_blocks),
+                "block_id",
+            )
             .select("block_id", "key", "profile_id", "source_id")
         )
-        return BlockCollection(assignments=assignments, meta=meta, clean=blocks.clean)
+        return BlockCollection(
+            assignments=assignments,
+            meta=meta,
+            clean=blocks.clean,
+            num_blocks=blocks.num_blocks,
+        )
 
     @staticmethod
     def convert_groundtruth(

@@ -156,7 +156,9 @@ def _shingle_blocks(spark, sf_dir, clean: bool = False):
     # policy the reference applies manually (SURVEY §4
     # persist/unpersist row).
     keys = _doc_keys_shingle(spark, sf_dir, clean).cache()
-    blocks = Blocking.blocks_from_keys(keys, clean=clean, assign_ids=False).cache()
+    blocks = Blocking.blocks_from_keys(keys, clean=clean, assign_ids=False)
+    blocks.assignments.cache()
+    blocks.meta.cache()
     profile_blocks = Converters.blocks_to_profile_blocks(blocks).cache()
     return blocks, profile_blocks
 

@@ -369,7 +369,9 @@ def q_er_chi2_entropy_edges(spark, sf_dir):
     from sparker_spark.blocking.converters import Converters
     from sparker_spark.metablocking.weights import EdgeWeighting
 
-    blocks = _cluster_blocks(spark, sf_dir).cache()
+    blocks = _cluster_blocks(spark, sf_dir)
+    blocks.assignments.cache()
+    blocks.meta.cache()
     pb = Converters.blocks_to_profile_blocks(blocks)
     ctx = EdgeWeighting.weighted_edges(
         blocks, pb, WeightTypes.CHI_SQUARE, use_entropy=True
@@ -422,7 +424,9 @@ def q_er_blast_wnp(spark, sf_dir):
     from sparker_spark.metablocking.weights import EdgeWeighting
     from sparker_spark.metablocking.wnp import WNP
 
-    blocks = _cluster_blocks(spark, sf_dir).cache()
+    blocks = _cluster_blocks(spark, sf_dir)
+    blocks.assignments.cache()
+    blocks.meta.cache()
     pb = Converters.blocks_to_profile_blocks(blocks)
     ctx = EdgeWeighting.weighted_edges(
         blocks, pb, WeightTypes.CHI_SQUARE, use_entropy=True
@@ -550,7 +554,6 @@ def q_gsmb_features(spark, sf_dir):
     blocks = Blocking.blocks_from_keys(keys, clean=False, assign_ids=False)
     purged = BlockPurging.block_purging(blocks, GSMB_SMOOTH)
     _, _, rebuilt = BlockFiltering.block_filtering_quick(purged, FILTER_R)
-    rebuilt.cache()
     feats = FeatureGenerator.generate_features(rebuilt)
     out_cols = [
         rnd(F.col(c).cast("double"), 6).alias(c) for c in FEATURE_COLS

@@ -485,7 +485,6 @@ def _blast_edges(spark, sf_dir):
     _, pb_filtered, rebuilt = BlockFiltering.block_filtering_quick(
         purged, BLAST_FILTER_R
     )
-    rebuilt.cache()
     ctx = EdgeWeighting.weighted_edges(
         rebuilt, pb_filtered, WeightTypes.CHI_SQUARE, use_entropy=True
     )

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sparker_spark.blocking.blockers import BlockCollection
+from sparker_spark.blocking.blockers import BlockCollection, block_index
 from sparker_spark.blocking.converters import Converters
 
 # Python round() is banker's (half-to-even); Spark's round() is
@@ -46,9 +46,11 @@ class BlockPurging:
                 F.sum("comparisons").alias("cc"),
                 F.sum("block_size").alias("bc"),
             )
-            .orderBy("level")
             .collect()
         )
+        # O(#distinct levels) rows: sorted on the driver, not with a
+        # range sort (its sampling job and exchange)
+        rows.sort(key=lambda r: r["level"])
         if len(rows) < 2:
             return None  # single comparison level (see block_purging)
         # driver-side cumulative scan — O(#distinct levels), exactly the
@@ -84,8 +86,15 @@ class BlockPurging:
             # deviation — purging a uniform collection is never useful).
             return blocks
         meta = blocks.meta.where(F.col("comparisons") <= F.lit(int(threshold)))
-        assignments = blocks.assignments.join(meta.select("block_id"), "block_id")
-        return BlockCollection(assignments=assignments, meta=meta, clean=blocks.clean)
+        assignments = blocks.assignments.join(
+            block_index(meta.select("block_id"), blocks.num_blocks), "block_id"
+        )
+        return BlockCollection(
+            assignments=assignments,
+            meta=meta,
+            clean=blocks.clean,
+            num_blocks=blocks.num_blocks,
+        )
 
 
 class BlockFiltering:
@@ -174,8 +183,18 @@ class BlockFiltering:
         blocks: BlockCollection, r: float
     ) -> tuple[DataFrame, DataFrame, BlockCollection]:
         """Composite (filters.py:93-117): blocks -> profile_blocks ->
-        filtered profile_blocks -> rebuilt blocks."""
+        filtered profile_blocks -> rebuilt blocks.
+
+        ``filtered`` is the chain's one reuse boundary between blocking
+        and meta-blocking: the rebuilt meta and assignments, the edge
+        weighting's scalars, its per-profile block counts and its pair
+        enumeration all read it. It is pinned with a lazy
+        ``localCheckpoint`` that the returned frames own, so purging
+        and filtering run once, at the first action, instead of once
+        per reader; nothing enters the session's cache."""
         profile_blocks = Converters.blocks_to_profile_blocks(blocks)
-        filtered = BlockFiltering.block_filtering(profile_blocks, r)
+        filtered = BlockFiltering.block_filtering(profile_blocks, r).localCheckpoint(
+            eager=False
+        )
         rebuilt = Converters.profile_blocks_to_blocks(filtered, blocks)
         return profile_blocks, filtered, rebuilt

@@ -12,6 +12,16 @@ partition's cumulative row-count offset (a tiny driver-side list —
 ``global_cumsum`` and ``global_topk`` share that range-offset core
 (:func:`_range_offsets`).
 
+Where the local rank is computed: BEFORE the checkpoint, in the
+range-shuffled partitions themselves — ``sortWithinPartitions`` on the
+key, then ``monotonically_increasing_id() − (partition id << 33)``,
+which is the row's 0-based position in its sorted partition. The
+stored rows carry their rank, so reading a ranked relation is a scan
+plus one map lookup: no ``Window.partitionBy(_pid)`` and so no
+``Exchange hashpartitioning(_pid)`` per read. The running sums of
+``global_cumsum`` and ``global_topk``'s boundary cut still window over
+``_pid`` after the checkpoint.
+
 The result is bit-identical to the single-partition window for any
 total ordering (ties impossible when the sort key set is unique per
 row): range partition boundaries only decide WHERE a row is ranked,
@@ -31,25 +41,36 @@ from pyspark.sql import functions as F
 
 
 def _range_offsets(
-    df: DataFrame, key: list[Column], total: Column
+    df: DataFrame, key: list[Column], total: Column, local_rank: bool = False
 ) -> tuple[DataFrame, dict, Column]:
     """Range-partition ``df`` on ``key`` and tag each row with its
-    partition id ``_pid``. Returns the pinned partitions, the
-    ``{_pid: (start, end)}`` running-``total`` span of every non-empty
-    partition, and each row's partition start as a column."""
-    parts = (
-        df.repartitionByRange(*key)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    partition id ``_pid`` (and, with ``local_rank``, its 0-based rank
+    within the partition as ``_local``). Returns the pinned
+    partitions, the ``{_pid: (start, end)}`` running-``total`` span of
+    every non-empty partition, and each row's partition start as a
+    column."""
+    parts = df.repartitionByRange(*key)
+    if local_rank:
+        # monotonically_increasing_id = (partition index << 33) + row
+        # number within the partition, so over a sorted partition the
+        # difference is the local rank
+        parts = parts.sortWithinPartitions(*key).withColumn(
+            "_local",
+            F.monotonically_increasing_id()
+            - F.shiftleft(F.spark_partition_id().cast("long"), 33),
+        )
+    parts = parts.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
+        eager=False
     )
     # The checkpoint is load-bearing: range boundaries are fixed at
     # shuffle time, and both the collected spans and every later read
     # of `parts` see the same stored partitions, so the offsets stay
     # consistent with the rows they are added to.
-    rows = parts.groupBy("_pid").agg(total.alias("_t")).orderBy("_pid").collect()
+    rows = parts.groupBy("_pid").agg(total.alias("_t")).collect()
     spans = {}
     acc = 0
-    for r in rows:
+    # #partitions rows: sorted on the driver, not with a range sort
+    for r in sorted(rows, key=lambda r: r["_pid"]):
         spans[r["_pid"]] = (acc, acc + r["_t"])
         acc += r["_t"]
     # empty input -> no spans; create_map() with zero entries is a
@@ -68,14 +89,20 @@ def global_rank(df: DataFrame, cols: list[str], out: str = "pos") -> DataFrame:
     """Add ``out`` = dense 0-based global rank of each row under
     ORDER BY *cols* (which must form a total order — make the last
     column a unique tiebreaker)."""
+    return global_rank_count(df, cols, out)[0]
+
+
+def global_rank_count(
+    df: DataFrame, cols: list[str], out: str = "pos"
+) -> tuple[DataFrame, int]:
+    """:func:`global_rank` plus the relation's exact row count, which
+    the collected span map already holds (no extra job)."""
     key = [F.col(c) for c in cols]
-    parts, _, start = _range_offsets(df, key, F.count("*"))
-    w = Window.partitionBy("_pid").orderBy(*key)
-    return (
-        parts.withColumn("_local", F.row_number().over(w) - 1)
-        .withColumn(out, (start + F.col("_local")).cast("long"))
-        .drop("_pid", "_local")
+    parts, spans, start = _range_offsets(df, key, F.count("*"), local_rank=True)
+    ranked = parts.withColumn(out, (start + F.col("_local")).cast("long")).drop(
+        "_pid", "_local"
     )
+    return ranked, max((e for _, e in spans.values()), default=0)
 
 
 def global_cumsum(

@@ -11,6 +11,7 @@ paths, and a shuffle-partition count that AQE coalesces downward.
 from __future__ import annotations
 
 import os
+import re
 import threading
 from contextlib import contextmanager
 
@@ -64,6 +65,24 @@ def shuffle_partitions(spark: SparkSession) -> int:
     except (TypeError, ValueError):
         par = 0
     return par if par > 0 else spark.sparkContext.defaultParallelism
+
+
+# JavaUtils.byteStringAs suffixes as binary shifts (a bare number and
+# a "b" suffix are bytes)
+_BYTE_SHIFTS = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def broadcast_threshold(spark: SparkSession) -> int | None:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes, or None for
+    "do not hint". The conf is a byte string ("10485760b", "10MB",
+    "10m" or a bare byte count); -1 disables broadcasting, and empty,
+    non-positive or unparseable values are None as well."""
+    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    m = re.fullmatch(r"(-?\d+)([kmgtp]?)b?", str(raw or "").strip().lower())
+    if not m:
+        return None
+    n = int(m.group(1)) << _BYTE_SHIFTS[m.group(2)]
+    return n if n > 0 else None
 
 
 @contextmanager

@@ -96,7 +96,6 @@ def cora_features(spark):
     # GSMB notebook stage params: purge 1.025, filter 0.8
     purged = BlockPurging.block_purging(blocks, 1.025)
     _, pbf, rebuilt = BlockFiltering.block_filtering_quick(purged, 0.8)
-    rebuilt.cache()
     id_map = profiles.select("profile_id", "original_id").distinct()
     ours = FeatureGenerator.generate_features(rebuilt, id_map=id_map).cache()
     return {"profiles": profiles, "rebuilt": rebuilt, "ours": ours}

@@ -107,11 +107,10 @@ def our_run(spark):
     gt_raw = JSONWrapper.load_groundtruth(spark, GT, "id1", "id2")
     gt = Converters.convert_groundtruth(gt_raw, o1, o2)
 
-    blocks = Blocking.create_blocks(profiles, clean=True).cache()
+    blocks = Blocking.create_blocks(profiles, clean=True)
     purged = BlockPurging.block_purging(blocks, 1.025)
     pb, pbf, rebuilt = BlockFiltering.block_filtering_quick(purged, 0.8)
     pbf = pbf.cache()
-    rebuilt.cache()
     edges = WNP.wnp(
         rebuilt,
         pbf,

@@ -44,7 +44,7 @@ def records(spark):
 @pytest.fixture(scope="module")
 def blocks(records):
     profiles = DataFrameWrapper.load_profiles(records, real_id_field="id")
-    return Blocking.create_blocks(profiles).cache()
+    return Blocking.create_blocks(profiles)
 
 
 def edge_map(df):

@@ -117,7 +117,7 @@ def ours3(spark):
     for p in parts[1:]:
         profiles = profiles.unionByName(p)
     profiles = profiles.cache()
-    blocks = Blocking.create_blocks(profiles, clean=True).cache()
+    blocks = Blocking.create_blocks(profiles, clean=True)
     pb = Converters.blocks_to_profile_blocks(blocks).cache()
     oid = {
         r["profile_id"]: r["original_id"]
@@ -330,7 +330,7 @@ def _load_both(spark, reference, sources):
     for p in parts[1:]:
         profiles = profiles.unionByName(p)
     profiles = profiles.cache()
-    blocks = Blocking.create_blocks(profiles, clean=True).cache()
+    blocks = Blocking.create_blocks(profiles, clean=True)
     pb = Converters.blocks_to_profile_blocks(blocks).cache()
     oid = {
         r["profile_id"]: r["original_id"]

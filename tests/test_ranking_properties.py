@@ -109,3 +109,20 @@ def test_global_topk_boundary_k(spark, k):
     assert _cache_empty(spark)
     want = sorted(sorted(rows)[:k])
     assert got == want
+
+
+def _physical_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_global_rank_reads_without_exchange(spark):
+    """The local rank is stored with the checkpointed rows, so reading
+    the ranked relation — here twice — is a scan of the checkpoint and
+    a map lookup, with no exchange on the partition id."""
+    df = spark.createDataFrame([(i % 7, i) for i in range(40)], "a long, b long")
+    ranked = global_rank(df, ["a", "b"], out="pos")
+    plan = _physical_plan(ranked.unionByName(ranked))
+    assert plan.count("Scan ExistingRDD") == 2
+    assert "Exchange" not in plan
+    got = sorted((r["a"], r["b"], r["pos"]) for r in ranked.collect())
+    assert [p for _, _, p in got] == list(range(40))

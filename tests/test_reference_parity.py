@@ -69,11 +69,10 @@ def our_pipeline(spark):
     profiles = CSVWrapper.load_profiles(
         spark, CORA, header=True, real_id_field="id"
     ).cache()
-    blocks = Blocking.create_blocks(profiles).cache()
+    blocks = Blocking.create_blocks(profiles)
     purged = BlockPurging.block_purging(blocks, 1.005)
     pb, pb_filtered, rebuilt = BlockFiltering.block_filtering_quick(purged, 0.8)
     pb_filtered = pb_filtered.cache()
-    rebuilt.cache()
     return {
         "profiles": profiles,
         "blocks": blocks,

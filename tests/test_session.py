@@ -1,4 +1,5 @@
-"""shuffle_partitions: the one parser of spark.sql.shuffle.partitions;
+"""shuffle_partitions and broadcast_threshold: the one parsers of
+spark.sql.shuffle.partitions and spark.sql.autoBroadcastJoinThreshold;
 scoped_conf: the one scoped setter of session conf; the streaming
 state-partition sizing that reads both."""
 
@@ -10,7 +11,11 @@ from types import SimpleNamespace
 import pytest
 
 from sparker_spark.entry_r5 import _stream_state_partitions
-from sparker_spark.session import scoped_conf, shuffle_partitions
+from sparker_spark.session import (
+    broadcast_threshold,
+    scoped_conf,
+    shuffle_partitions,
+)
 
 
 def _stub(value, default_parallelism=6):
@@ -130,3 +135,33 @@ def test_stream_state_partitions_sums_nested_files(tmp_path):
     )
     assert n == 5
     assert _stream_state_partitions(_stub("3"), str(stage), bytes_per_partition=10) == 3
+
+
+@pytest.mark.parametrize(
+    "value, expected",
+    [
+        ("10485760b", 10485760),  # how Spark renders the default
+        ("10MB", 10 << 20),
+        (" 10mb ", 10 << 20),
+        ("10 MB", None),  # Spark rejects inner spaces too
+        ("10m", 10 << 20),
+        ("64kb", 64 << 10),
+        ("1g", 1 << 30),
+        ("4096", 4096),
+        ("-1", None),  # broadcasting disabled
+        ("0", None),
+        ("", None),
+        (None, None),
+        ("ten", None),
+        ("1.5MB", None),
+    ],
+)
+def test_broadcast_threshold_parses_byte_strings(value, expected):
+    assert broadcast_threshold(_stub(value)) == expected
+
+
+def test_broadcast_threshold_live_session(spark):
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "2MB"}):
+        assert broadcast_threshold(spark) == 2 << 20
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        assert broadcast_threshold(spark) is None

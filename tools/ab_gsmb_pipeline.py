@@ -34,7 +34,6 @@ def pipeline(spark, sf_dir, use_cache: bool, det_neg: bool):
     blocks = Blocking.blocks_from_keys(keys, clean=False, assign_ids=False)
     purged = BlockPurging.block_purging(blocks, GSMB_SMOOTH)
     _, _, rebuilt = BlockFiltering.block_filtering_quick(purged, FILTER_R)
-    rebuilt.cache()
     total = int(rebuilt.meta.agg(F.sum("block_size")).first()[0] or 0)
     feats = FeatureGenerator.generate_features(rebuilt)
 

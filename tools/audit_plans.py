@@ -8,6 +8,13 @@ SF and inspects the formatted physical plan for scale anti-patterns:
     two documented exact-baseline queries that are crossJoin BY DESIGN)
   * parquet scans reading all columns when the query projects few
     (column pruning failure) — reported, not fatal
+  * an ``Exchange hashpartitioning(_pid …)`` over a ``Scan ExistingRDD``
+    — a checkpointed ranking result (ranking.py) re-shuffled on read.
+    ``global_rank`` stores its rank with the rows, so this must not
+    come back; the running-sum window of ``global_cumsum`` and
+    ``global_topk``'s boundary cut still key on ``_pid`` after their
+    checkpoint, which is why this is a reported finding, not a
+    failure
 
 Usage: python tools/audit_plans.py [sf_dir] [query ...]
 Exit code 1 if any query outside the allowlist plans a nested loop.
@@ -44,6 +51,39 @@ ALLOW_WIDE = {
     "min_order/max_order) — the relation IS the output, nothing to "
     "prune",
 }
+
+
+_TREE_NODE = re.compile(r"^(?P<indent>[\s:+\-]*)(?P<name>[A-Za-z].*?) \((?P<id>\d+)\)$")
+
+
+def pid_exchanges_over_checkpoints(plan: str) -> int:
+    """Count the formatted plan's ``Exchange hashpartitioning(_pid``
+    nodes whose input, up to the next exchange, is a ``Scan
+    ExistingRDD`` (a checkpoint)."""
+    nodes = []  # (depth, name, id) in tree order
+    for line in plan.split("\n\n")[0].splitlines():
+        m = _TREE_NODE.match(line)
+        if m:
+            nodes.append((len(m.group("indent")), m.group("name"), m.group("id")))
+    args = {
+        m.group(1): m.group(2)
+        for m in re.finditer(r"\((\d+)\) Exchange\n(?:.*\n)*?Arguments: (.*)", plan)
+    }
+    hits = 0
+    for i, (depth, name, nid) in enumerate(nodes):
+        if name != "Exchange" or not args.get(nid, "").startswith("hashpartitioning(_pid"):
+            continue
+        below = []  # the subtree down to (not into) the next exchange
+        skip_depth = None
+        for d, n, _ in nodes[i + 1 :]:
+            if d <= depth:
+                break
+            if skip_depth is not None and d > skip_depth:
+                continue
+            skip_depth = d if n == "Exchange" else None
+            below.append(n)
+        hits += "Scan ExistingRDD" in below
+    return hits
 
 
 def main():
@@ -102,6 +142,9 @@ def main():
         elif nested:
             kind = "mask-loop" if mask_loops == nested else "allowed by design"
             flags.append(f"nested-loop ({kind}) x{nested}")
+        pid_reads = pid_exchanges_over_checkpoints(plan)
+        if pid_reads:
+            flags.append(f"ranked-read exchange x{pid_reads}")
         if wide_scans:
             note = ALLOW_WIDE.get(name)
             flags.append(

@@ -74,9 +74,8 @@ def main():
         _, pb_filtered, rebuilt = BlockFiltering.block_filtering_quick(
             purged, BLAST_FILTER_R
         )
-        rebuilt.cache()
         rebuilt.meta.count()
-        mark("filter (rebuilt cached)")
+        mark("filter (filtered profile blocks pinned)")
 
         spark.sparkContext.setJobDescription("blast: chi2+entropy weighting")
         ctx = EdgeWeighting.weighted_edges(
