@@ -70,9 +70,11 @@ class BlockCollection:
 _DEFAULT_SIZE = {"integer": 4, "long": 8, "double": 8, "string": 20}
 
 
-def block_index(index: DataFrame, num_blocks: int | None) -> DataFrame:
-    """``index`` — a projection of a block meta relation with at most
-    ``num_blocks`` rows — as the build side of a join against it.
+def block_index(index: DataFrame, rows: int | None) -> DataFrame:
+    """``index`` — a relation with at most ``rows`` rows: a projection
+    of a block meta relation (bound: #blocks), or of the membership
+    relation (bound: Σ block_size) — as the build side of a join
+    against it.
 
     A ranked meta is a checkpoint, and a checkpoint carries Spark's
     plan estimate (gigabytes) rather than its size, so Catalyst never
@@ -81,12 +83,12 @@ def block_index(index: DataFrame, num_blocks: int | None) -> DataFrame:
     ``spark.sql.autoBroadcastJoinThreshold``; with no bound or no
     threshold (-1) the plan is left to Catalyst."""
     threshold = broadcast_threshold(index.sparkSession)
-    if num_blocks is None or threshold is None:
+    if rows is None or threshold is None:
         return index
     width = 8 + sum(
         _DEFAULT_SIZE.get(f.dataType.typeName(), 8) for f in index.schema
     )
-    return F.broadcast(index) if num_blocks * width <= threshold else index
+    return F.broadcast(index) if rows * width <= threshold else index
 
 
 def comparisons_expr(clean: bool):

@@ -48,7 +48,14 @@ class Converters:
         the zero-comparison filter in the same pass. The previous
         formulation joined meta onto the full membership relation
         before aggregating and again after, i.e. two full passes over
-        the big relation per rebuild."""
+        the big relation per rebuild.
+
+        The rebuilt meta is #blocks-sized and has three readers: the
+        scalars of ``weighted_edges``, the assignments join below and
+        the per-block sums of the pair enumeration. It is pinned with
+        a lazy ``localCheckpoint`` that it owns, so the stats
+        aggregate and its join run once, and every reader plans a
+        leaf scan; the assignments plan that scan's broadcast."""
         if blocks.clean:
             per_source = profile_blocks.groupBy("block_id", "source_id").agg(
                 F.count("*").alias("n")
@@ -88,6 +95,7 @@ class Converters:
                 "entropy",
                 "cluster_id",
             )
+            .localCheckpoint(eager=False)
         )
         assignments = (
             profile_blocks.select("block_id", "profile_id", "source_id")

@@ -63,7 +63,9 @@ class FeatureGenerator:
         )
 
         totals = blocks.meta.agg(
-            F.count("*").alias("b"), F.sum("comparisons").alias("t")
+            F.count("*").alias("b"),
+            F.sum("comparisons").alias("t"),
+            F.sum("block_size").alias("s"),
         ).first()
         num_blocks_total = totals["b"]
         total_comparisons = totals["t"] or 0
@@ -81,6 +83,7 @@ class FeatureGenerator:
                 "inv_size": 1.0 / F.col("block_size"),
             },
             num_blocks_total,
+            totals["s"],
         )
         # three plan legs consume this relation (the feature join
         # plus both symmetrized halves of the stats derivation);

@@ -43,10 +43,12 @@ class CEP:
     @staticmethod
     def prune(ctx: EdgeContext, k: int) -> DataFrame:
         # NOTE (r12): global_topk's range repartition runs the input
-        # lineage twice (boundary sampling + shuffle), but
-        # ctx.materialize() here measured SLOWER (4.1 s vs 3.5 s at
-        # sf0.1): the weighting re-run over the cached block relations
-        # is cheaper than writing the full edge relation once. Left
+        # lineage twice (boundary sampling + shuffle). ctx.materialize()
+        # here measured SLOWER (4.1 s vs 3.5 s at sf0.1) when it was an
+        # EAGER pin: its own job wrote the full edge relation, which
+        # cost more than re-running the weighting over the cached block
+        # relations. The lazy pin is no better: `er_cep_cbs` at sf0.01
+        # (local[4]) runs 23 jobs with it and 21 without. Left
         # unmaterialized deliberately.
         return global_topk(
             ctx.half(), [("weight", True), ("p1", False), ("p2", False)], int(k)

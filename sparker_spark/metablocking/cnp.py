@@ -50,7 +50,9 @@ class CNP:
     ) -> DataFrame:
         if comparison_type not in (ComparisonTypes.AND, ComparisonTypes.OR):
             raise ValueError(f"invalid comparison type: {comparison_type}")
-        ctx.materialize()  # top-k + half legs share one edge scan
+        # pin the edges: the top-k checkpoint below writes the lazy
+        # pin, and the half leg reads it instead of re-enumerating
+        ctx.materialize()
         # Same plan policy as WNP's threshold joins: the retained
         # relation is at most k rows per profile — checkpoint it once
         # and broadcast both membership joins when small, keeping the

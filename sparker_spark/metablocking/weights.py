@@ -10,8 +10,11 @@ scalability cliff (the whole filtered block collection must fit on the
 driver AND in every Python worker). This engine replaces that with the
 classic relational form: a self-equi-join of the exploded
 (block, profile) assignments on block_id followed by a hash aggregate.
-Catalyst picks shuffle-hash/sort-merge, AQE splits skewed block_ids,
-Tungsten spills — none of which the reference can do. That enumeration
+When the caller knows Σ block_size and it fits, the membership side is
+broadcast (the reference's broadcast index, without the driver
+collect); otherwise Catalyst picks shuffle-hash/sort-merge, AQE splits
+skewed block_ids, Tungsten spills — none of which the reference can
+do. That enumeration
 lives in one place, ``_shared_block_pairs``, which also feeds the GSMB
 features (feature_generator.py) and the block-collection PC/PQ
 (evaluation.py); each weight formula is defined once, in
@@ -45,7 +48,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sparker_spark.blocking.blockers import BlockCollection
+from sparker_spark.blocking.blockers import BlockCollection, block_index
 from sparker_spark.metablocking.pruning_utils import WeightTypes
 from sparker_spark.session import shuffle_partitions
 
@@ -56,6 +59,7 @@ def _shared_block_pairs(
     blocks: BlockCollection,
     sums: dict[str, Column] | None = None,
     num_blocks: int | None = None,
+    num_members: int | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
     """The one enumeration of co-occurring profile pairs: every edge
     weight, ``all_weights``, the GSMB features and the block-collection
@@ -84,6 +88,17 @@ def _shared_block_pairs(
     every block is near-universal and the pair aggregate is the
     bottleneck — takes the bitmask plan, which replaces the
     shuffle+agg entirely. Everything else takes the block self-join.
+
+    ``num_members``: caller-supplied Σ block_size, the exact number of
+    membership rows (an optimizer hint too). Plan shape of the block
+    self-join: the per-block sums ride a join against
+    ``blocks.meta`` bounded by ``num_blocks``, and the ``dst`` side of
+    the self-join is the membership relation bounded by
+    ``num_members``; each is broadcast when its bound says it fits
+    (:func:`block_index`), so the enumeration shuffles only on the
+    pair key. Without a bound the plan is Catalyst's: it shuffles
+    every membership on ``bid``, and AQE at best turns the join into a
+    broadcast read from that shuffle's output.
     """
     sums = sums or {}
     if (
@@ -103,16 +118,22 @@ def _shared_block_pairs(
         # (assignment-sized) instead of joining meta onto the Σ size²
         # enumerated relation
         a = a.join(
-            blocks.meta.select(
-                F.col("block_id").alias("bid"),
-                *[c.alias(name) for name, c in sums.items()],
+            block_index(
+                blocks.meta.select(
+                    F.col("block_id").alias("bid"),
+                    *[c.alias(name) for name, c in sums.items()],
+                ),
+                num_blocks,
             ),
             "bid",
         )
-    b = blocks.assignments.select(
-        F.col("block_id").alias("bid"),
-        F.col("profile_id").alias("dst"),
-        F.col("source_id").alias("dst_source"),
+    b = block_index(
+        blocks.assignments.select(
+            F.col("block_id").alias("bid"),
+            F.col("profile_id").alias("dst"),
+            F.col("source_id").alias("dst_source"),
+        ),
+        num_members,
     )
     # Every shared-block aggregate is SYMMETRIC in (p, q), so only the
     # src < dst half is enumerated: the filter runs inside the join's
@@ -264,6 +285,13 @@ def _directed(base: DataFrame) -> DataFrame:
     return base.unionByName(_mirror(base.where(F.col("src") < F.col("dst"))))
 
 
+def _both_orientations(half: DataFrame, loops: DataFrame | None) -> DataFrame:
+    """The directed relation of :func:`_shared_block_pairs`' output:
+    the half, its mirror, then any dirty self-loops."""
+    directed = half.unionByName(_mirror(half))
+    return directed if loops is None else directed.unionByName(loops)
+
+
 def _entropy_sum(use_entropy: bool) -> dict[str, Column] | None:
     """The per-block value entropy-boosted weights sum over shared
     blocks (as ``entropy_sum``)."""
@@ -294,22 +322,25 @@ class EdgeContext:
     _base: DataFrame | None = None
 
     def materialize(self) -> "EdgeContext":
-        """Checkpoint the edge relation once before multi-consumer
-        pruning. Every pruner reads ``edges`` from several plan legs
+        """Pin the edge relation once before multi-consumer pruning.
+        Every pruner reads ``edges`` from several plan legs
         (thresholds / top-k / the p1<p2 half), and Spark re-runs the
         Σ size² co-occurrence enumeration + shuffle for each leg —
         exchange reuse does not survive AQE re-optimization across
-        those subtrees. Materializing costs one write of the
-        aggregated relation (cut the sf0.1 mega-block WNP from 34 s to
-        16 s). For symmetric weight types only the src <= dst BASE is
-        written — half the rows of the directed relation — and the
-        mirror is a cheap map over the checkpointed data. Idempotent."""
+        those subtrees. The pin is a lazy ``localCheckpoint`` that the
+        context owns: its first reader (the threshold aggregate, the
+        top-k or the global mean) writes it, and every later leg reads
+        it, so pinning costs no job of its own (pinning cut the sf0.1
+        mega-block WNP from 34 s to 16 s). For symmetric weight types
+        only the src <= dst BASE is pinned — half the rows of the
+        directed relation — and the mirror is a cheap map over the
+        pinned data. Idempotent."""
         if not self._materialized:
             if self._base is not None:
-                self._base = self._base.localCheckpoint(eager=True)
+                self._base = self._base.localCheckpoint(eager=False)
                 self.edges = _directed(self._base)
             else:
-                self.edges = self.edges.localCheckpoint(eager=True)
+                self.edges = self.edges.localCheckpoint(eager=False)
             self._materialized = True
         return self
 
@@ -340,8 +371,7 @@ class EdgeWeighting:
         half, loops = _shared_block_pairs(
             blocks, _entropy_sum(use_entropy), num_blocks
         )
-        directed = half.unionByName(_mirror(half))
-        return directed if loops is None else directed.unionByName(loops)
+        return _both_orientations(half, loops)
 
     @staticmethod
     def arcs_log_denominator(blocks: BlockCollection) -> DataFrame:
@@ -413,13 +443,13 @@ class EdgeWeighting:
             WeightTypes.ECBS,
             WeightTypes.CHI_SQUARE,
         )
+        half, loops = _shared_block_pairs(
+            blocks, _entropy_sum(use_entropy), num_blocks, sizes["s"]
+        )
         if symmetric:
-            half, loops = _shared_block_pairs(
-                blocks, _entropy_sum(use_entropy), num_blocks
-            )
             co = half if loops is None else half.unionByName(loops)
         else:
-            co = EdgeWeighting.co_occurrence(blocks, use_entropy, num_blocks)
+            co = _both_orientations(half, loops)
         e, num_edges = EdgeWeighting._with_profile_stats(
             co, blocks, profile_blocks_filtered, [weight_type]
         )

@@ -24,7 +24,9 @@ class WEP:
 
     @staticmethod
     def prune(ctx: EdgeContext) -> DataFrame:
-        ctx.materialize()  # threshold agg + half filter share one scan
+        # pin the edges: the global mean writes the lazy pin, and the
+        # half filter reads it instead of re-enumerating
+        ctx.materialize()
         threshold = WEP.calc_global_threshold(ctx)
         return ctx.half().where(F.col("weight") >= F.lit(threshold))
 

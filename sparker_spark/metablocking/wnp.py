@@ -74,7 +74,9 @@ class WNP:
         """Pruned edges (p1, p2, weight) with p1 < p2 — wnp.py:26-77."""
         if comparison_type not in (ComparisonTypes.AND, ComparisonTypes.OR):
             raise ValueError(f"invalid comparison type: {comparison_type}")
-        ctx.materialize()  # thresholds + half legs share one edge scan
+        # pin the edges: the threshold aggregate writes the lazy pin,
+        # and the half leg reads it instead of re-enumerating
+        ctx.materialize()
         # Broadcast the (profile, threshold) relation into BOTH
         # endpoint joins when it is small: thresholds is #profiles
         # rows, orders of magnitude below the edge relation, and

@@ -227,7 +227,7 @@ def test_generate_features_agree_across_plans(
     monkeypatch.setattr(
         feature_generator,
         "_shared_block_pairs",
-        lambda blocks, sums, num_blocks: weights._shared_block_pairs(blocks, sums),
+        lambda blocks, sums, *hints: weights._shared_block_pairs(blocks, sums),
     )
     general = features()
     assert fast

@@ -1,21 +1,33 @@
-"""The block-index joins and the filtered profile blocks' pin.
+"""The block-index joins, the pair enumeration's build side, and the
+pins of the filtered profile blocks and the rebuilt meta.
 
 ``BlockCollection.num_blocks`` bounds #blocks; the five joins against
 the block index (blocks_from_keys, block_purging and the three in
 Converters) broadcast the index when bound × row width is within
 ``spark.sql.autoBroadcastJoinThreshold`` and leave the plan to
-Catalyst otherwise. ``block_filtering_quick`` pins the filtered
-profile blocks, so every reader plans a leaf scan.
+Catalyst otherwise. The pair enumeration's block self-join applies the
+same rule to its membership side, bounded by Σ block_size.
+``block_filtering_quick`` pins the filtered profile blocks and the
+rebuild pins its meta, so every reader of either plans a leaf scan.
 """
 
+import random
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from sparker_spark.blocking.blockers import Blocking, BlockCollection, block_index
 from sparker_spark.blocking.converters import Converters
 from sparker_spark.blocking.strategies import BlockingKeysStrategies
 from sparker_spark.filters import BlockFiltering, BlockPurging
+from sparker_spark.metablocking.pruning_utils import (
+    ComparisonTypes,
+    ThresholdTypes,
+    WeightTypes,
+)
+from sparker_spark.metablocking.weights import EdgeWeighting, _shared_block_pairs
+from sparker_spark.metablocking.wnp import WNP
 from sparker_spark.session import scoped_conf
 from sparker_spark.wrappers import DataFrameWrapper
 
@@ -56,8 +68,9 @@ def _joins(df):
 
 
 # each relation and the number of block-index joins its plan holds:
-# the filtered profile blocks are a leaf, so the rebuilt meta holds
-# only its own join and the rebuilt assignments add one more
+# the filtered profile blocks and the rebuilt meta are leaves (the
+# meta's own join runs inside its pin), so the rebuilt meta plans no
+# join and the rebuilt assignments plan only theirs
 SITES = {
     "blocks_from_keys": (lambda b, p, f, r: b.assignments, 1),
     "block_purging": (lambda b, p, f, r: p.assignments, 2),
@@ -65,9 +78,20 @@ SITES = {
         lambda b, p, f, r: Converters.blocks_to_profile_blocks(p),
         3,
     ),
-    "profile_blocks_to_blocks.meta": (lambda b, p, f, r: r.meta, 1),
-    "profile_blocks_to_blocks.assignments": (lambda b, p, f, r: r.assignments, 2),
+    "profile_blocks_to_blocks.meta": (lambda b, p, f, r: r.meta, 0),
+    "profile_blocks_to_blocks.assignments": (lambda b, p, f, r: r.assignments, 1),
+    # the pair enumeration's self-join, and the rebuilt assignments' join
+    # on each of its sides
+    "shared_block_pairs": (
+        lambda b, p, f, r: _shared_block_pairs(r, None, None, _members(r))[0],
+        3,
+    ),
 }
+
+
+def _members(blocks):
+    """Σ block_size: the membership count the enumeration is hinted with."""
+    return blocks.meta.agg(F.sum("block_size")).first()[0]
 
 
 @pytest.mark.parametrize("site", sorted(SITES))
@@ -131,7 +155,87 @@ def test_clusters_pass_the_bound_through(profiles):
     assert blocks.num_blocks == blocks.meta.count()
 
 
+def _is_leaf_scan(df):
+    plan = df._jdf.queryExecution().executedPlan().toString().strip()
+    return len(plan.splitlines()) == 1 and "Scan ExistingRDD" in plan
+
+
 def test_filtered_profile_blocks_are_a_leaf_scan(profiles):
     _, _, filtered, _ = _chain(profiles)
-    plan = filtered._jdf.queryExecution().executedPlan().toString().strip()
-    assert len(plan.splitlines()) == 1 and "Scan ExistingRDD" in plan
+    assert _is_leaf_scan(filtered)
+
+
+def test_rebuilt_meta_is_a_leaf_scan(profiles):
+    _, _, _, rebuilt = _chain(profiles)
+    assert _is_leaf_scan(rebuilt.meta)
+
+
+def test_enumeration_threshold_is_inclusive(spark, profiles):
+    """The enumeration's build side is hinted when Σ block_size × row
+    width is within the threshold, and never without the count. Its
+    membership relation is a leaf here, so the self-join's is the only
+    hint in the plan."""
+    rebuilt = _chain(profiles)[3]
+    members = _members(rebuilt)
+    leaf = BlockCollection(rebuilt.assignments.localCheckpoint(), rebuilt.meta, False)
+    # the build side's row is (bid LONG, dst LONG, dst_source INT):
+    # 8 + 8 + 4 bytes and an 8-byte header
+    for threshold, hinted in ((members * 28, True), (members * 28 - 1, False)):
+        with scoped_conf(spark, {THRESHOLD: str(threshold)}):
+            assert _hinted(_shared_block_pairs(leaf, None, None, members)[0]) is hinted
+    with scoped_conf(spark, {THRESHOLD: "10MB"}):
+        assert _hinted(_shared_block_pairs(leaf, None, None, members)[0])
+        assert not _hinted(_shared_block_pairs(leaf)[0])  # no count, no hint
+
+
+@pytest.fixture(scope="module")
+def many_blocks(spark):
+    """60 entities with three copies each (a copy drops one of the
+    entity's six words, drawn from 120): enough surviving blocks
+    (> 63) that the edge weights take the block self-join, not the
+    bitmask plan, and enough cross-entity pairs that WNP prunes."""
+    rnd = random.Random(7)
+    words = [rnd.sample(range(120), 6) for _ in range(60)]
+    rows = [
+        (f"q{e}_{c}", " ".join(f"w{w}" for j, w in enumerate(ws) if j != c))
+        for e, ws in enumerate(words)
+        for c in range(3)
+    ]
+    records = spark.createDataFrame(rows, ["id", "text"])
+    return DataFrameWrapper.load_profiles(records, real_id_field="id").localCheckpoint()
+
+
+WEIGHTS = [
+    (WeightTypes.CBS, False),
+    (WeightTypes.JS, False),
+    (WeightTypes.ECBS, False),
+    (WeightTypes.CHI_SQUARE, True),
+]
+
+
+def _pruned(profiles, weight_type, use_entropy):
+    """{comparison type: sorted (p1, p2, weight) rows} of WNP over the
+    chain's rebuilt blocks, and #blocks."""
+    _, _, filtered, rebuilt = _chain(profiles)
+    ctx = EdgeWeighting.weighted_edges(rebuilt, filtered, weight_type, use_entropy)
+    out = {
+        c: sorted(tuple(r) for r in WNP.prune(ctx, ThresholdTypes.AVG, c).collect())
+        for c in (ComparisonTypes.AND, ComparisonTypes.OR)
+    }
+    return out, ctx.num_blocks
+
+
+@pytest.mark.parametrize("weight_type,use_entropy", WEIGHTS)
+def test_wnp_pairs_do_not_depend_on_the_broadcasts(
+    spark, many_blocks, weight_type, use_entropy
+):
+    """WNP keeps the same pairs, with the same weights, whether every
+    block-index join and the enumeration's build side are broadcast
+    (10MB) or none is (-1)."""
+    with scoped_conf(spark, {THRESHOLD: "-1"}):
+        shuffled, num_blocks = _pruned(many_blocks, weight_type, use_entropy)
+    with scoped_conf(spark, {THRESHOLD: "10MB"}):
+        broadcast, _ = _pruned(many_blocks, weight_type, use_entropy)
+    assert num_blocks > 63
+    assert shuffled[ComparisonTypes.OR]
+    assert broadcast == shuffled

@@ -12,6 +12,7 @@ from sparker_spark.blocking.blockers import Blocking
 from sparker_spark.blocking.converters import Converters
 from sparker_spark.blocking.strategies import BlockingKeysStrategies
 from sparker_spark.evaluation import Evaluation
+from sparker_spark.feature_generator import FeatureGenerator
 from sparker_spark.filters import BlockFiltering, BlockPurging
 from sparker_spark.metablocking.cep import CEP
 from sparker_spark.metablocking.cnp import CNP
@@ -23,6 +24,7 @@ from sparker_spark.metablocking.pruning_utils import (
 from sparker_spark.metablocking.weights import EdgeWeighting
 from sparker_spark.metablocking.wep import WEP
 from sparker_spark.metablocking.wnp import WNP
+from sparker_spark.supervised import SupervisedMB
 from sparker_spark.wrappers import DataFrameWrapper
 
 
@@ -306,10 +308,11 @@ def test_wnp_large_path_matches_broadcast_path(blocks):
 
 
 def test_public_chains_leave_no_cached_relation(spark, records):
-    """The dirty WNP chain and the BLAST chain, run end to end through
-    the public API, leave nothing in the session's CacheManager: every
-    materialization on the way is owned by the relation that needs it
-    and freed with it."""
+    """The dirty WNP chain, the GSMB tail over its filtered blocks and
+    the BLAST chain, run end to end through the public API, leave
+    nothing in the session's CacheManager: every materialization on
+    the way is owned by the relation that needs it and freed with
+    it."""
     cm = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
 
@@ -321,6 +324,14 @@ def test_public_chains_leave_no_cached_relation(spark, records):
     ctx = EdgeWeighting.weighted_edges(rebuilt, filtered, WeightTypes.CBS)
     pairs = WNP.prune(ctx, ThresholdTypes.AVG, ComparisonTypes.OR)
     pairs.write.format("noop").mode("overwrite").save()
+    assert cm.isEmpty()
+
+    # GSMB: features -> classifier -> CEP over the same filtered blocks
+    gt = spark.createDataFrame([(0, 1)], "p1 long, p2 long")
+    features = FeatureGenerator.generate_features(rebuilt, groundtruth=gt)
+    scored = SupervisedMB.train_score(features)
+    total = rebuilt.meta.agg(F.sum("block_size")).first()[0]
+    SupervisedMB.cep(scored, total).write.format("noop").mode("overwrite").save()
     assert cm.isEmpty()
 
     # two sources, the second with its attribute renamed

@@ -15,6 +15,11 @@ SF and inspects the formatted physical plan for scale anti-patterns:
     ``global_topk``'s boundary cut still key on ``_pid`` after their
     checkpoint, which is why this is a reported finding, not a
     failure
+  * one checkpoint (one ``Scan ExistingRDD`` RDD id) under more than
+    one ``BroadcastExchange`` — the same pinned relation built into
+    several broadcasts, e.g. one per projection of a block index, or
+    WNP's two threshold joins. Each broadcast is a job of its own;
+    reported, not fatal
 
 Usage: python tools/audit_plans.py [sf_dir] [query ...]
 Exit code 1 if any query outside the allowlist plans a nested loop.
@@ -56,15 +61,45 @@ ALLOW_WIDE = {
 _TREE_NODE = re.compile(r"^(?P<indent>[\s:+\-]*)(?P<name>[A-Za-z].*?) \((?P<id>\d+)\)$")
 
 
-def pid_exchanges_over_checkpoints(plan: str) -> int:
-    """Count the formatted plan's ``Exchange hashpartitioning(_pid``
-    nodes whose input, up to the next exchange, is a ``Scan
-    ExistingRDD`` (a checkpoint)."""
-    nodes = []  # (depth, name, id) in tree order
+def _tree(plan: str) -> list[tuple[int, str, str]]:
+    """(depth, name, id) of every node of the formatted plan's tree, in
+    tree order."""
+    nodes = []
     for line in plan.split("\n\n")[0].splitlines():
         m = _TREE_NODE.match(line)
         if m:
             nodes.append((len(m.group("indent")), m.group("name"), m.group("id")))
+    return nodes
+
+
+def repeated_checkpoint_broadcasts(plan: str) -> dict[str, int]:
+    """RDD -> the number of ``BroadcastExchange`` nodes that build a
+    broadcast over that checkpoint's ``Scan ExistingRDD`` (the nearest
+    broadcast above each scan), for the RDDs broadcast more than once."""
+    rdd_of = {
+        m.group(1): m.group(2)
+        for m in re.finditer(
+            r"\((\d+)\) Scan ExistingRDD\n(?:.*\n)*?Arguments: .*?(\w*RDD\[\d+\])", plan
+        )
+    }
+    broadcasts: dict[str, set[str]] = {}
+    stack: list[tuple[int, str, str]] = []  # the ancestors of the current node
+    for depth, name, nid in _tree(plan):
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        if name == "Scan ExistingRDD" and nid in rdd_of:
+            above = next((a for d, n, a in reversed(stack) if n == "BroadcastExchange"), None)
+            if above is not None:
+                broadcasts.setdefault(rdd_of[nid], set()).add(above)
+        stack.append((depth, name, nid))
+    return {rdd: len(b) for rdd, b in broadcasts.items() if len(b) > 1}
+
+
+def pid_exchanges_over_checkpoints(plan: str) -> int:
+    """Count the formatted plan's ``Exchange hashpartitioning(_pid``
+    nodes whose input, up to the next exchange, is a ``Scan
+    ExistingRDD`` (a checkpoint)."""
+    nodes = _tree(plan)
     args = {
         m.group(1): m.group(2)
         for m in re.finditer(r"\((\d+)\) Exchange\n(?:.*\n)*?Arguments: (.*)", plan)
@@ -145,6 +180,8 @@ def main():
         pid_reads = pid_exchanges_over_checkpoints(plan)
         if pid_reads:
             flags.append(f"ranked-read exchange x{pid_reads}")
+        for rdd, n in sorted(repeated_checkpoint_broadcasts(plan).items()):
+            flags.append(f"checkpoint broadcast x{n} ({rdd})")
         if wide_scans:
             note = ALLOW_WIDE.get(name)
             flags.append(
