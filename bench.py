@@ -146,20 +146,24 @@ def pipeline_blast_e2e(spark, sf_dir):
 
 def pipeline_gsmb_e2e(spark, sf_dir):
     """GSMB end-to-end (SURVEY §3.3): unigram blocking -> purging ->
-    filtering -> 9-feature generation -> logistic-regression training
+    filtering -> feature generation -> logistic-regression training
     on exact-duplicate labels -> scoring -> supervised CEP pruning.
 
-    Scale posture: the candidate relation (Σ comparisons pairs — 12.5M
-    at sf0.1) is cached ONCE as flat double columns; MLlib vectors are
-    assembled only for the tiny balanced training sample (VectorUDT
-    rows are several times wider than flat doubles and fall out of
-    whole-stage codegen — materializing them for every candidate pair
-    tripled the pipeline cost). Scoring applies the fitted model as a
-    literal sigmoid(w·x + b) column expression — pure codegen, no
-    per-row JVM vector allocation, and the plan is identical at any
-    scale-out."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import VectorAssembler
+    The classifier stage is the library's ``SupervisedMB.train_score``:
+    it pins the labelled feature relation once, fits on a deterministic
+    xxhash per-class sample collected to the driver, and scores with
+    the fitted coefficients as one literal column expression.
+
+    Labels need both classes. The sf0.001 and sf0.01 test data hold no
+    exact-duplicate document (sf0.1 holds 8 groups), so at those
+    scales ``train_score`` raises its two-class ``ValueError``. The
+    inline classifier this pipeline used to carry fitted a one-class
+    model there and timed a pipeline that returned 0 rows.
+
+    Series break: records before this classifier path trained on the
+    first 200 positives by (p1, p2) and the first 200 negatives in
+    scan order, so their output rows (9,807 at sf0.1, now 46,522) and
+    timings do not compare with later ones."""
     from pyspark.sql import functions as F
 
     from sparker_spark.blocking.blockers import Blocking
@@ -203,46 +207,9 @@ def pipeline_gsmb_e2e(spark, sf_dir):
         )
         .withColumn("is_match", (F.col("h1") == F.col("h2")).cast("int"))
         .select("p1", "p2", "is_match", *FEATURE_COLS)
-        .fillna(0)
-        .cache()
     )
-    # pull the tiny balanced train sample to the driver and fit on a
-    # single-partition local relation: each MLlib iteration launches a
-    # treeAggregate job, and when the train lineage hangs off the
-    # 12.5M-row cached relation those ~20 jobs cost seconds each in
-    # scheduling/scan overhead (measured 77 s at sf0.1 vs 7 s total for
-    # collect+local fit). 400 rows is driver-safe at any scale — the
-    # sample size is fixed, not data-dependent.
-    #
-    # Positives are pulled with a parallel full filter, NOT limit():
-    # CollectLimit scans partitions sequentially (1, 4, 16, ...) until
-    # it finds enough rows, and when the filtered class is rare that
-    # serializes a scan of most of the pair relation on one thread at a
-    # time (measured 9.7 s vs 0.8 s at sf0.1, where only 8 positive
-    # pairs exist). The count guard keeps the driver pull bounded if a
-    # label source ever makes positives dense — in that case limit()'s
-    # first partition has plenty and IS the fast path.
-    pos = labeled.where("is_match = 1")
-    if pos.count() <= 10_000:
-        pos_pd = pos.toPandas().sort_values(["p1", "p2"]).head(200)
-    else:
-        pos_pd = pos.limit(200).toPandas()
-    import pandas as pd
-
-    train_pd = pd.concat(
-        [pos_pd, labeled.where("is_match = 0").limit(200).toPandas()],
-        ignore_index=True,
-    )
-    train = spark.createDataFrame(train_pd).coalesce(1)
-    va = VectorAssembler(inputCols=FEATURE_COLS, outputCol="features")
-    model = LogisticRegression(maxIter=20, labelCol="is_match").fit(
-        va.transform(train)
-    )
-    margin = F.lit(float(model.intercept))
-    for c, w in zip(FEATURE_COLS, model.coefficients):
-        margin = margin + F.col(c) * F.lit(float(w))
-    scored = labeled.select(
-        "p1", "p2", (F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))).alias("p_match")
+    scored = SupervisedMB.train_score(
+        labeled, feature_cols=FEATURE_COLS, samples_per_class=200, max_iter=20
     )
     return SupervisedMB.cep(scored, total)
 
@@ -329,6 +296,12 @@ def pipeline_pretrain_e2e(spark, sf_dir):
 
     return q_pipeline_pretrain_e2e(spark, sf_dir)
 
+
+# appended to the records' series_break (pipeline_gsmb_e2e's docstring)
+GSMB_SERIES_BREAK = (
+    "pipeline_gsmb_e2e: library classifier with the xxhash per-class "
+    "sample — rows and timings do not compare with earlier records"
+)
 
 PIPELINES = {
     "pipeline_blast_e2e": pipeline_blast_e2e,
@@ -538,10 +511,17 @@ def main():
     # its own first run). With the barrier every rep measures the
     # same clean-JVM-warm plan — the protocol of the r6 judge's
     # controlled reruns.
+    failed: dict[str, str] = {}
     for name, fn in PIPELINES.items():
         if ONLY and name not in ONLY:
             continue
-        run_reps(name, fn, isolate_fn=barrier)
+        try:
+            run_reps(name, fn, isolate_fn=barrier)
+        except ValueError as e:
+            # pipeline_gsmb_e2e on data with one label class (its
+            # docstring): recorded as failed, never timed
+            failed[name] = str(e)
+            print(f"# {name}: FAILED {e}", file=sys.stderr)
 
     stream_queries = [q for q in QUERIES if q.startswith("stream_")]
     for name in stream_queries:
@@ -590,12 +570,14 @@ def main():
         "reps": REPS,
         "first_run_total_sec": round(first_run_total, 3),
         **({"subset": sorted(ONLY)} if ONLY else {}),
+        **({"failed": failed} if failed else {}),
         "series_break": "r9: clearCache+GC barrier between EVERY query "
         "(r7 isolated only pipelines/stream) — medians are per-query "
         "clean-JVM-warm, comparable to controlled reruns; cross-query "
         "shared-cache warm time moved into cold/first_run_total_sec; "
         "r11: headline median over WARM reps only (reps 2+) — the "
-        "first rep's cache builds stay in the cold map",
+        "first rep's cache builds stay in the cold map; "
+        + GSMB_SERIES_BREAK,
     }
     # full record -> committed artifact; stdout gets a compact line.
     # Subset runs write a SEPARATE artifact so the committed
@@ -677,13 +659,15 @@ def main():
             "sentinel_flags": len(flagged),
             **({"quarantined": True} if quarantined else {}),
             **({"subset": True} if ONLY else {}),
+            **({"failed": sorted(failed)} if failed else {}),
             "queries": {
                 **{k: timings[k] for k in PIPELINES if k in timings},
                 **{k: timings[k] for k in WATCHLIST if k in timings},
                 **dict(slowest),
             },
             "full_record": "BENCH_LOCAL.json",
-            "series_break": "r9: per-query clearCache barrier",
+            "series_break": "r9: per-query clearCache barrier; "
+            + GSMB_SERIES_BREAK,
         }
         line = json.dumps(compact)
         if len(line) < 1900 or not slowest:

@@ -2,10 +2,12 @@
 
 Reference parity: python/sparker/supervised_metablocking.py:8-203.
 Input: a DataFrame of scored edges (p1, p2, p_match[, is_match]) —
-typically the FeatureGenerator output scored by a pyspark.ml
-classifier. All strategies here are UDF-free (the reference uses
-BooleanType Python UDFs + driver-collected max/top-k maps —
-supervised_metablocking.py:58,111,167; windows + joins replace both).
+typically the FeatureGenerator output scored by ``train_score``: a
+logistic regression fitted on a small balanced sample and applied as
+one literal column expression. All strategies here are UDF-free (the
+reference uses BooleanType Python UDFs + driver-collected max/top-k
+maps — supervised_metablocking.py:58,111,167; windows + joins replace
+both).
 
 Top-k tie-breaking: the reference sorts by -p_match only, leaving ties
 to input order; we break ties by neighbor id ascending (deterministic).
@@ -50,7 +52,11 @@ class SupervisedMB:
         fitting on the lazy limit-union would re-execute the
         feature-generation lineage inside every one of them. The
         sample is 2·samples_per_class rows by construction, so the
-        collect is a bounded driver scalar.
+        collect is a bounded driver scalar. Both classes come back in
+        one ``toPandas``; each ``orderBy(…).limit(k)`` plans a
+        TakeOrdered over all partitions at once, not a bare
+        ``limit``'s partition-by-partition scan, which crawls when a
+        class is rare.
 
         Returns the fitted ``LogisticRegressionModel``; pass it to
         :meth:`score`.
@@ -99,18 +105,25 @@ class SupervisedMB:
         """Score every candidate edge with the fitted classifier:
         (p1, p2, p_match[, kept columns]) — the input relation every
         pruner in this module consumes. ``p_match`` is the positive-
-        class probability (the notebook's get_p_match UDF, replaced by
-        the vectorized ``vector_to_array``)."""
-        from pyspark.ml.feature import VectorAssembler
-        from pyspark.ml.functions import vector_to_array
-
+        class probability (the notebook's get_p_match UDF), computed
+        from the model's ``coefficients`` and ``intercept`` as one
+        literal column, ``1 / (1 + exp(-(b + Σ wᵢ·xᵢ)))``, over the
+        same null/NaN → 0 fill the training sample had. That is what
+        ``model.transform`` computes, without assembling a vector per
+        row: the plan stays a whole-stage-codegen projection of the
+        input."""
         fcols = list(feature_cols)
-        va = VectorAssembler(inputCols=fcols, outputCol="features")
-        scored = model.transform(va.transform(features.fillna(0, subset=fcols)))
+        filled = features.fillna(0, subset=fcols)
+        margin = F.lit(float(model.intercept))
+        for c, w in zip(fcols, model.coefficients):
+            margin = margin + F.col(c) * F.lit(float(w))
         keep = [c for c in keep_cols if c in features.columns]
-        return scored.withColumn(
-            "p_match", vector_to_array("probability")[1]
-        ).select("p1", "p2", "p_match", *keep)
+        return filled.select(
+            "p1",
+            "p2",
+            (F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))).alias("p_match"),
+            *keep,
+        )
 
     @staticmethod
     def train_score(
@@ -123,16 +136,32 @@ class SupervisedMB:
     ) -> DataFrame:
         """One-call train + score: the notebook's whole classifier
         stage. Returns the scored edge relation ready for
-        blast/cep/wep/cnp/rcnp."""
+        blast/cep/wep/cnp/rcnp.
+
+        The feature relation is the stage's reuse boundary: the
+        training sample and the scorer both read it. It is pinned with
+        a lazy ``localCheckpoint`` that the result owns, so the sample
+        action writes it and scoring scans it instead of re-running
+        the feature generator."""
+        pinned = features.localCheckpoint(eager=False)
         model = SupervisedMB.train_lr(
-            features,
+            pinned,
             feature_cols=feature_cols,
             label_col=label_col,
             samples_per_class=samples_per_class,
             seed=seed,
             max_iter=max_iter,
         )
-        return SupervisedMB.score(features, model, feature_cols=feature_cols)
+        return SupervisedMB.score(pinned, model, feature_cols=feature_cols)
+
+    @staticmethod
+    def _pinned_over_t(edges: DataFrame) -> DataFrame:
+        """The ``p_match >= 0.5`` subset, for pruners that read it from
+        several plan legs, each of which would otherwise re-run the
+        scoring lineage. The pin is a lazy ``localCheckpoint`` that the
+        result owns: the first job to scan a partition writes it, later
+        ones read it, and nothing enters the session's cache."""
+        return edges.filter("p_match >= 0.5").localCheckpoint(eager=False)
 
     @staticmethod
     def bcl(edges: DataFrame) -> DataFrame:
@@ -151,11 +180,10 @@ class SupervisedMB:
         K-boundary). p_match is continuous, so a score histogram would
         have one group per edge; the range plan is distribution-blind."""
         k = int(total_block_size / 2)
-        # materialize the thresholded subset once: global_topk's range
-        # repartition samples its input for boundaries and then
-        # shuffles it — two executions of the scoring lineage without
-        # a checkpoint
-        over_t = edges.filter("p_match >= 0.5").localCheckpoint(eager=True)
+        # global_topk's range repartition samples its input for
+        # boundaries and then shuffles it: the sample job writes the
+        # pin and the shuffle reads it
+        over_t = SupervisedMB._pinned_over_t(edges)
         return global_topk(
             over_t, [("p_match", True), ("p1", False), ("p2", False)], k
         )
@@ -165,11 +193,10 @@ class SupervisedMB:
         """Weight edge pruning: mean p_match of the >= 0.5 subset as
         global threshold (supervised_metablocking.py:28-36).
 
-        The thresholded subset is materialized once: the threshold
-        aggregate and the filter leg would otherwise each re-run the
-        scoring lineage (the same two-pass shape WEP.prune fixes with
-        ctx.materialize())."""
-        over_t = edges.filter("p_match >= 0.5").localCheckpoint(eager=True)
+        The threshold aggregate writes the pinned subset and the
+        filter leg reads it (the same two-pass shape WEP.prune fixes
+        with ctx.materialize())."""
+        over_t = SupervisedMB._pinned_over_t(edges)
         threshold = over_t.agg(F.avg("p_match").alias("t")).first()["t"]
         if threshold is None:
             return over_t
@@ -217,11 +244,10 @@ class SupervisedMB:
         """CNP (OR): keep if the edge is in EITHER side's top-k
         (supervised_metablocking.py:131-180)."""
         k = SupervisedMB._k(total_block_size, n_entities)
-        # materialize the thresholded subset ONCE: the two top-k
-        # windows and the semi-join probe side are three independent
-        # plan legs, and each re-ran the full scoring lineage (the
-        # multi-leg shape CNP.prune fixes with ctx.materialize())
-        over_t = edges.filter("p_match >= 0.5").localCheckpoint(eager=True)
+        # the two top-k windows and the semi-join probe side are three
+        # plan legs over one pin (the multi-leg shape CNP.prune fixes
+        # with ctx.materialize())
+        over_t = SupervisedMB._pinned_over_t(edges)
         top1, top2 = SupervisedMB._top_k(over_t, k)
         # no distinct: left_semi emits each probe row at most once
         # regardless of build-side duplicates, so the dedup shuffle
@@ -234,9 +260,8 @@ class SupervisedMB:
         """Reciprocal CNP (AND): edge must be in BOTH sides' top-k
         (supervised_metablocking.py:71-128)."""
         k = SupervisedMB._k(total_block_size, n_entities)
-        # one materialization feeds both windows + the probe side
-        # (see cnp)
-        over_t = edges.filter("p_match >= 0.5").localCheckpoint(eager=True)
+        # one pin feeds both windows + the probe side (see cnp)
+        over_t = SupervisedMB._pinned_over_t(edges)
         top1, top2 = SupervisedMB._top_k(over_t, k)
         return over_t.join(top1, ["p1", "p2"], "left_semi").join(
             top2, ["p1", "p2"], "left_semi"

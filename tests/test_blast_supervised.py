@@ -2,6 +2,7 @@
 meta-blocking (M6), including feature parity vs the reference on cora."""
 
 import os
+import random
 import sys
 
 import pytest
@@ -199,6 +200,58 @@ def test_supervised_pruners(spark):
         for r in SupervisedMB.rcnp(edges, 4, 4).collect()
     }
     assert kept_and <= kept_or
+
+
+@pytest.fixture(scope="module")
+def labelled(spark):
+    """120 labelled edges whose classes overlap on three features, so
+    the fitted weights are non-trivial; some features are null or NaN,
+    which the classifier reads as 0."""
+    rnd = random.Random(3)
+    rows = []
+    for i in range(120):
+        y = i % 3 == 0
+        f = [rnd.gauss(1.0 if y else 0.0, 1.0) for _ in range(3)]
+        if i % 17 == 0:
+            f[1] = None
+        if i % 23 == 0:
+            f[2] = float("nan")
+        rows.append((i, i + 1000, int(y), *f))
+    return spark.createDataFrame(
+        rows, "p1 long, p2 long, is_match int, a double, b double, c double"
+    )
+
+
+def test_score_matches_mllib_probability(labelled):
+    """The literal scorer is the fitted model: p_match equals
+    ``model.transform``'s positive-class probability."""
+    from pyspark.ml.feature import VectorAssembler
+    from pyspark.ml.functions import vector_to_array
+
+    fcols = ["a", "b", "c"]
+    model = SupervisedMB.train_lr(
+        labelled, feature_cols=fcols, samples_per_class=30, max_iter=100
+    )
+    assert any(w != 0 for w in model.coefficients)
+    scored = SupervisedMB.score(labelled, model, feature_cols=fcols)
+    assert scored.columns == ["p1", "p2", "p_match", "is_match"]
+    ours = {(r.p1, r.p2): r.p_match for r in scored.collect()}
+    va = VectorAssembler(inputCols=fcols, outputCol="features")
+    reference = model.transform(va.transform(labelled.fillna(0, subset=fcols)))
+    theirs = {
+        (r.p1, r.p2): r.p
+        for r in reference.select(
+            "p1", "p2", vector_to_array("probability")[1].alias("p")
+        ).collect()
+    }
+    assert len(ours) == 120 and ours.keys() == theirs.keys()
+    assert max(abs(ours[k] - theirs[k]) for k in theirs) <= 1e-12
+
+
+def test_train_lr_needs_both_classes(labelled):
+    one_class = labelled.withColumn("is_match", F.lit(0))
+    with pytest.raises(ValueError, match="both classes"):
+        SupervisedMB.train_lr(one_class, feature_cols=["a", "b", "c"])
 
 
 @needs_reference

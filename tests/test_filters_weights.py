@@ -307,6 +307,21 @@ def test_wnp_large_path_matches_broadcast_path(blocks):
     assert blast_large == blast_small
 
 
+def test_train_score_reads_the_pin(records):
+    """The scored edges are one projection over the pinned feature
+    relation: no re-planned feature generator (its per-profile
+    aggregate, its pair joins) and no MLlib vector column."""
+    profiles = DataFrameWrapper.load_profiles(records, real_id_field="id")
+    blocks = Blocking.blocks_from_keys(BlockingKeysStrategies.token_blocking(profiles))
+    gt = records.sparkSession.createDataFrame([(0, 1)], "p1 long, p2 long")
+    scored = SupervisedMB.train_score(FeatureGenerator.generate_features(blocks, groundtruth=gt))
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan ExistingRDD") == 1
+    for node in ("Aggregate", "Join", "Exchange", "UDF"):
+        assert node not in plan, plan
+    assert [f.dataType.typeName() for f in scored.schema] == ["long", "long", "double", "integer"]
+
+
 def test_public_chains_leave_no_cached_relation(spark, records):
     """The dirty WNP chain, the GSMB tail over its filtered blocks and
     the BLAST chain, run end to end through the public API, leave

@@ -17,7 +17,9 @@ stack, and emits one JSON record per SF (gsmb_shuffle_budget.json) so
 SCALING.md can quote measured-vs-predicted instead of an estimate.
 
 Usage: python tools/gsmb_shuffle_budget.py [sf_dir ...]
-  default: /root/testdata/sf0.01 /root/testdata/sf0.1
+  default: bench.py's SF_DIR, sf0.1 unless SPARK_GRAFT_SF_DIR names
+  another (the pipeline needs both label classes, and sf0.001 and
+  sf0.01 hold no exact-duplicate document)
 """
 
 from __future__ import annotations
@@ -83,11 +85,10 @@ def _pair_count(spark, sf_dir: str) -> tuple[int, int]:
 
 
 def main() -> None:
-    sf_dirs = sys.argv[1:] or [
-        "/root/testdata/sf0.01",
-        "/root/testdata/sf0.1",
-    ]
+    from bench import SF_DIR, pipeline_gsmb_e2e
     from sparker_spark.session import get_spark
+
+    sf_dirs = sys.argv[1:] or [SF_DIR]
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     records = []
@@ -108,7 +109,6 @@ def main() -> None:
             },
         )
         spark.sparkContext.setLogLevel("ERROR")
-        from bench import pipeline_gsmb_e2e
 
         t0 = time.time()
         rows = pipeline_gsmb_e2e(spark, sf_dir).count()
