@@ -174,7 +174,7 @@ def pipeline_gsmb_e2e(spark, sf_dir):
     from sparker_spark.llm.dedup import Dedup
     from sparker_spark.supervised import SupervisedMB
 
-    keys = _doc_keys_unigram(spark, sf_dir).cache()
+    keys = _doc_keys_unigram(spark, sf_dir).localCheckpoint(eager=False)
     blocks = Blocking.blocks_from_keys(keys, clean=False, assign_ids=False)
     purged = BlockPurging.block_purging(blocks, GSMB_SMOOTH)
     _, _, rebuilt = BlockFiltering.block_filtering_quick(purged, FILTER_R)
@@ -242,12 +242,12 @@ def pipeline_curation_e2e(spark, sf_dir):
 
 
 def pipeline_events_e2e(spark, sf_dir):
-    """Event-analytics end-to-end: one cached scan of the events table
+    """Event-analytics end-to-end: one pinned scan of the events table
     feeds sessionization, the strict-order funnel, day-cohort
     retention, the per-user decay score, hourly anomaly z-scores, and
     the Markov transition matrix; the result is the per-user
     engagement report an analytics warehouse would serve. Every stage
-    is a window or hash aggregate over the SAME cached relation — the
+    is a window or hash aggregate over the SAME pinned relation — the
     scan and the shuffle-by-user are paid once across the per-user
     stages."""
     from pyspark.sql import functions as F
@@ -255,7 +255,7 @@ def pipeline_events_e2e(spark, sf_dir):
     from sparker_spark.entry import QUERIES, _load_events
     from sparker_spark.funnel import Anomaly, Decay, Funnel, Transitions
 
-    ev = _load_events(spark, sf_dir).cache()
+    ev = _load_events(spark, sf_dir).localCheckpoint(eager=False)
     steps = ["view", "click", "signup", "purchase"]
 
     sessions = QUERIES["events_sessionize"](spark, sf_dir)
@@ -385,11 +385,9 @@ def main():
         # localCheckpoint RDDs from a finished query linger until
         # Python GC triggers the py4j release; left alone they build
         # storage/GC pressure that inflates LATER queries' times.
-        # Collect between queries to free them. Cached relations are
-        # deliberately KEPT: identical-plan cache hits across queries
-        # (e.g. the unigram key relation) are the realistic warm-
-        # pipeline behavior, and clearing them re-charges keygen to
-        # every query.
+        # Collect between queries to free them. No registry query
+        # caches a relation (its pins are localCheckpoints), so the
+        # collect is the whole isolation.
         import gc
 
         gc.collect()
@@ -504,13 +502,12 @@ def main():
         )
 
     # barrier between pipeline REPS, not just between pipelines: each
-    # rep constructs FRESH DataFrames whose internal .cache() calls
-    # register new entries (no reuse across reps), so without the
-    # sweep the reps ACCUMULATE 12M-row cached relations and the
-    # median drifts upward with GC pressure (observed: gsmb median >
-    # its own first run). With the barrier every rep measures the
-    # same clean-JVM-warm plan — the protocol of the r6 judge's
-    # controlled reruns.
+    # rep constructs FRESH DataFrames whose pins are not reused
+    # across reps, so without the sweep the reps ACCUMULATE 12M-row
+    # relations and the median drifts upward with GC pressure
+    # (observed: gsmb median > its own first run). With the barrier
+    # every rep measures the same clean-JVM-warm plan — the protocol
+    # of the r6 judge's controlled reruns.
     failed: dict[str, str] = {}
     for name, fn in PIPELINES.items():
         if ONLY and name not in ONLY:

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from sparker_spark.blocking.strategies import BlockingKeysStrategies
 from sparker_spark.ranking import global_rank_count
-from sparker_spark.session import broadcast_threshold
+from sparker_spark.session import bounded_broadcast
 
 
 @dataclass
@@ -56,39 +56,14 @@ class BlockCollection:
     cluster blocking, purging and filtering's rebuild only drop blocks,
     so they pass it through. Hash ids (``assign_ids=False``), LSH,
     incremental and hand-built collections leave it None. Only the
-    joins against the block index read it (:func:`block_index`), to
-    broadcast the index when it fits; no result depends on it."""
+    joins against the block index read it
+    (:func:`sparker_spark.session.bounded_broadcast`), to broadcast the
+    index when it fits; no result depends on it."""
 
     assignments: DataFrame  # (block_id, key, profile_id, source_id)
     meta: DataFrame  # (block_id, key, block_size, num_sources, comparisons, entropy, cluster_id)
     clean: bool  # True = clean-clean (multi-source), False = dirty
     num_blocks: int | None = None  # upper bound on #blocks, see above
-
-
-# Spark's default per-value size estimates (DataType.defaultSize) by
-# type name; a row adds an 8-byte header (EstimationUtils.getSizePerRow)
-_DEFAULT_SIZE = {"integer": 4, "long": 8, "double": 8, "string": 20}
-
-
-def block_index(index: DataFrame, rows: int | None) -> DataFrame:
-    """``index`` — a relation with at most ``rows`` rows: a projection
-    of a block meta relation (bound: #blocks), or of the membership
-    relation (bound: Σ block_size) — as the build side of a join
-    against it.
-
-    A ranked meta is a checkpoint, and a checkpoint carries Spark's
-    plan estimate (gigabytes) rather than its size, so Catalyst never
-    broadcasts it on its own. Broadcast-hint it when the bound times
-    the estimated row width is within
-    ``spark.sql.autoBroadcastJoinThreshold``; with no bound or no
-    threshold (-1) the plan is left to Catalyst."""
-    threshold = broadcast_threshold(index.sparkSession)
-    if rows is None or threshold is None:
-        return index
-    width = 8 + sum(
-        _DEFAULT_SIZE.get(f.dataType.typeName(), 8) for f in index.schema
-    )
-    return F.broadcast(index) if rows * width <= threshold else index
 
 
 def comparisons_expr(clean: bool):
@@ -182,7 +157,7 @@ class Blocking:
         )
 
         assignments = keys.join(
-            block_index(meta.select("block_id", "key"), num_blocks), "key"
+            bounded_broadcast(meta.select("block_id", "key"), num_blocks), "key"
         ).select("block_id", "key", "profile_id", "source_id")
 
         return BlockCollection(

@@ -8,11 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparker_spark.blocking.blockers import (
-    BlockCollection,
-    block_index,
-    comparisons_expr,
-)
+from sparker_spark.blocking.blockers import BlockCollection, comparisons_expr
+from sparker_spark.session import bounded_broadcast
 
 
 class Converters:
@@ -26,7 +23,7 @@ class Converters:
         consume it directly.
         """
         return blocks.assignments.join(
-            block_index(
+            bounded_broadcast(
                 blocks.meta.select("block_id", "comparisons"), blocks.num_blocks
             ),
             "block_id",
@@ -80,7 +77,7 @@ class Converters:
             stats.withColumn("comparisons", comparisons_expr(blocks.clean))
             .where(F.col("comparisons") > 0)
             .join(
-                block_index(
+                bounded_broadcast(
                     blocks.meta.select("block_id", "key", "entropy", "cluster_id"),
                     blocks.num_blocks,
                 ),
@@ -100,7 +97,7 @@ class Converters:
         assignments = (
             profile_blocks.select("block_id", "profile_id", "source_id")
             .join(
-                block_index(meta.select("block_id", "key"), blocks.num_blocks),
+                bounded_broadcast(meta.select("block_id", "key"), blocks.num_blocks),
                 "block_id",
             )
             .select("block_id", "key", "profile_id", "source_id")

@@ -75,12 +75,12 @@ class IncrementalBlocking:
         three size aggregates in one er_incremental_delta plan (1.2 s
         standalone at sf0.1 vs 0.85 s materialized; r4's recorded
         0.30 s was a shared-bench-cache artifact, see BASELINE.md).
-        localCheckpoint (eager, GC-freed) is the repo's multi-consumer
-        idiom; the is_new flag rides along so the new-batch leg is a
-        codegen filter over the SAME materialized blocks instead of a
-        second lineage. The cap's semi-join is left lazy on purpose:
-        both join legs replay it over checkpointed postings (cheap,
-        broadcast build), and a second eager checkpoint costs more in
+        A lazy localCheckpoint that the result owns pins it; the
+        is_new flag rides along so the new-batch leg is a codegen
+        filter over the SAME pinned blocks instead of a second
+        lineage. The cap's semi-join is left unpinned on purpose:
+        both join legs replay it over the pinned postings (cheap,
+        broadcast build), and a second pin costs more in
         materialization round trips than it saves."""
         allk = (
             old_keys.select("profile_id", "key")
@@ -90,7 +90,7 @@ class IncrementalBlocking:
                     "is_new", F.lit(True)
                 )
             )
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
         if max_block_size is not None:
             sizes = allk.groupBy("key").agg(F.count("*").alias("_bs"))

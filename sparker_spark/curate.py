@@ -146,13 +146,14 @@ def curate(
             .select("doc_id", "redacted_text")
             .withColumnRenamed("redacted_text", "text")
         )
-    # Materialize the (possibly redacted) base ONCE: every stage below
+    # Pin the (possibly redacted) base ONCE: every stage below
     # consumes the surviving text several times (filter + semi-join
-    # legs), and without a checkpoint each leg would re-derive the
-    # full upstream lineage — multiplying base scans by 2 per stage.
-    # localCheckpoint is the repo's standard multi-consumer idiom (the
-    # RDD is freed by GC, unlike a session-pinned cache).
-    docs = docs.localCheckpoint(eager=True)
+    # legs), and without a pin each leg would re-derive the full
+    # upstream lineage — multiplying base scans by 2 per stage. Every
+    # pin here is a lazy localCheckpoint that the result owns: the
+    # first action that reads it writes it, and nothing enters the
+    # session's cache.
+    docs = docs.localCheckpoint(eager=False)
 
     if min_lm_logprob is not None or lm_floor_quantile is not None:
         from sparker_spark.llm.text import LanguageModelScore
@@ -165,7 +166,7 @@ def curate(
                 docs, lm_order, lm_prune_min_count, lm_prune_from
             )
             .select("doc_id", "avg_logprob")
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
         if lm_floor_quantile is not None:
             # corpus-relative floor (CCNet cuts by percentile, not
@@ -192,7 +193,7 @@ def curate(
                 | (F.col("avg_logprob") >= floor)
             )
             .select("doc_id", "text")
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
 
     if classifier_labels is not None:
@@ -205,7 +206,7 @@ def curate(
             docs.join(scores, "doc_id")
             .where(F.col("logit") >= float(min_classifier_logit))
             .select("doc_id", "text")
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
 
     preds = []
@@ -231,13 +232,11 @@ def curate(
         # each later stage consumes the surviving relation from 2
         # legs; checkpoint at the stage boundary so the quality/
         # repetition aggregates never re-execute downstream
-        docs = docs.localCheckpoint(eager=True)
+        docs = docs.localCheckpoint(eager=False)
 
     if exact_dedup:
         canon = Dedup.exact_groups(docs).where("is_canonical").select("doc_id")
-        docs = docs.join(canon, "doc_id", "left_semi").localCheckpoint(
-            eager=True
-        )
+        docs = docs.join(canon, "doc_id", "left_semi").localCheckpoint(eager=False)
 
     if dup_span_words is not None:
         from sparker_spark.llm.spans import duplicated_spans, remove_spans
@@ -252,7 +251,7 @@ def curate(
             remove_spans(docs, spans)
             .where(F.col("n_kept") > 0)
             .select("doc_id", F.col("clean_text").alias("text"))
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
 
     if jaccard_threshold is not None:
@@ -311,7 +310,7 @@ def funnel_report(
     the span stage, of the CUT text), so token deltas measure real
     stream shrinkage, not just doc attrition.
 
-    Plan: each stage's survivor relation is localCheckpointed once
+    Plan: each stage's survivor relation is pinned once (lazily)
     (consumed by both the next stage and its own 1-row aggregate),
     and the report is a union of 1-row aggregates — bounded output,
     keyed shuffles only."""
@@ -345,7 +344,7 @@ def funnel_report(
 
     cur = documents.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     rows = [_row(0, "raw", cur)]
     if min_quality is not None:
         q = (
@@ -353,13 +352,11 @@ def funnel_report(
             .where(F.col("quality_score") >= float(min_quality))
             .select("doc_id")
         )
-        cur = cur.join(q, "doc_id", "left_semi").localCheckpoint(eager=True)
+        cur = cur.join(q, "doc_id", "left_semi").localCheckpoint(eager=False)
         rows.append(_row(len(rows), "quality", cur))
     if exact_dedup:
         canon = Dedup.exact_groups(cur).where("is_canonical").select("doc_id")
-        cur = cur.join(canon, "doc_id", "left_semi").localCheckpoint(
-            eager=True
-        )
+        cur = cur.join(canon, "doc_id", "left_semi").localCheckpoint(eager=False)
         rows.append(_row(len(rows), "exact_dedup", cur))
     if dup_span_words is not None:
         from sparker_spark.llm.spans import duplicated_spans, remove_spans
@@ -374,7 +371,7 @@ def funnel_report(
             remove_spans(cur, spans)
             .where(F.col("n_kept") > 0)
             .select("doc_id", F.col("clean_text").alias("text"))
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
         rows.append(_row(len(rows), "span_dedup", cur))
     out = rows[0]

@@ -95,7 +95,7 @@ def dedupe(
     profiles = prep(df, 0, starts[0])
     for i, frame in enumerate(extra, start=1):
         profiles = profiles.unionByName(prep(frame, i, starts[i]))
-    profiles = profiles.cache()
+    profiles = profiles.localCheckpoint(eager=False)
 
     if blocking == "token":
         keys = BlockingKeysStrategies.token_blocking(profiles)
@@ -243,10 +243,10 @@ def dedup_corpus(
     its oracle-gated query runs — keyed aggregation (exact), banded
     LSH (minhash/simhash), bounded-cell SRP (semantic), pointer-
     jumping CC (log rounds, no driver graph). Stage boundaries are
-    localCheckpoint'ed: each stage's survivor set is consumed by at
-    least two downstream legs (the next stage + the final
-    attribution join), and without the cut every leg would re-derive
-    the full upstream lineage.
+    pinned with a lazy ``localCheckpoint`` that the result owns: each
+    stage's survivor set is consumed by at least two downstream legs
+    (the next stage + the final attribution join), and without the
+    cut every leg would re-derive the full upstream lineage.
     """
     from sparker_spark.graph import ConnectedComponents
     from sparker_spark.llm.dedup import Dedup, SemanticDedup
@@ -269,7 +269,7 @@ def dedup_corpus(
     docs = documents.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).alias("text"),
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
 
     def cluster_drops(pairs: DataFrame, nodes: DataFrame, method: str,
                       survivors: DataFrame) -> DataFrame:
@@ -343,11 +343,11 @@ def dedup_corpus(
                 "semantic",
                 survivors,
             )
-        d = d.localCheckpoint(eager=True)
+        d = d.localCheckpoint(eager=False)
         drop_rels.append(d)
         survivors = survivors.join(
             d.select("doc_id"), "doc_id", "left_anti"
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
 
     drops = drop_rels[0]
     for d in drop_rels[1:]:

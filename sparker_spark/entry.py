@@ -14,6 +14,8 @@ tiebreak so ULP-level cross-engine differences cannot flip row sets.
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -144,22 +146,31 @@ def _doc_keys_shingle(spark, sf_dir, clean: bool = False) -> DataFrame:
     )
 
 
+def _pin_blocks(blocks: BlockCollection) -> BlockCollection:
+    """``blocks`` with its assignments and meta pinned: lazy
+    localCheckpoints that the frames reading them own."""
+    return dataclasses.replace(
+        blocks,
+        assignments=blocks.assignments.localCheckpoint(eager=False),
+        meta=blocks.meta.localCheckpoint(eager=False),
+    )
+
+
 def _shingle_blocks(spark, sf_dir, clean: bool = False):
-    # Cache the KEYS relation (the expensive part: tokenize + shingle
+    # Pin the KEYS relation (the expensive part: tokenize + shingle
     # assembly + distinct) plus the derived block collection: the
     # downstream weighting/pruning plan references assignments/meta
     # several times, and Spark has no automatic subplan reuse — without
-    # caching, the keygen recomputes once per cached leg (assignments,
-    # meta, profile_blocks each materialize independently). Caching
-    # keys first makes those re-materializations cheap groupBys over
-    # the in-memory relation. Stage-boundary caching is the same
-    # policy the reference applies manually (SURVEY §4
-    # persist/unpersist row).
-    keys = _doc_keys_shingle(spark, sf_dir, clean).cache()
-    blocks = Blocking.blocks_from_keys(keys, clean=clean, assign_ids=False)
-    blocks.assignments.cache()
-    blocks.meta.cache()
-    profile_blocks = Converters.blocks_to_profile_blocks(blocks).cache()
+    # pins the keygen recomputes once per leg (assignments, meta,
+    # profile_blocks each materialize independently). Pinning keys
+    # first makes those re-materializations cheap groupBys over the
+    # stored relation. The reference persists the same stage
+    # boundaries by hand (SURVEY §4 persist/unpersist row).
+    keys = _doc_keys_shingle(spark, sf_dir, clean).localCheckpoint(eager=False)
+    blocks = _pin_blocks(Blocking.blocks_from_keys(keys, clean=clean, assign_ids=False))
+    profile_blocks = Converters.blocks_to_profile_blocks(blocks).localCheckpoint(
+        eager=False
+    )
     return blocks, profile_blocks
 
 
@@ -348,10 +359,10 @@ FROM blocks b, thr WHERE b.comparisons <= thr.t"""
 
 
 def q_er_block_filtering(spark, sf_dir):
-    # keys cached: purging's driver-scalar pass, the profile-blocks
+    # keys pinned: purging's driver-scalar pass, the profile-blocks
     # inversion and the final key join would otherwise each re-run the
     # tokenizer (see _shingle_blocks note)
-    keys = _doc_keys_unigram(spark, sf_dir).cache()
+    keys = _doc_keys_unigram(spark, sf_dir).localCheckpoint(eager=False)
     # assign_ids=False: xxhash64 block ids avoid the global-sort window
     # of dense id assignment (a single-partition stage at scale); the
     # filtering cutoff is tie-order independent so results are identical

@@ -211,7 +211,7 @@ def _canonical_clusters(spark, sf_dir) -> list[dict]:
     deterministic cluster ids: non-default clusters ordered by smallest
     member key (0..n−1), default cluster last (id n)."""
     eav = _customer_eav(spark, sf_dir)
-    toks_all = _attr_tokens(eav, distinct=False).cache()
+    toks_all = _attr_tokens(eav, distinct=False).localCheckpoint(eager=False)
     toks = toks_all.distinct()
     sigs = AttributeClustering.signatures(toks, ATTR_HASHES, ATTR_SEED)
     edges = AttributeClustering.similarity_edges(sigs, ATTR_HASHES, ATTR_LSH_T)
@@ -367,11 +367,10 @@ FROM bent"""
 
 def q_er_chi2_entropy_edges(spark, sf_dir):
     from sparker_spark.blocking.converters import Converters
+    from sparker_spark.entry import _pin_blocks
     from sparker_spark.metablocking.weights import EdgeWeighting
 
-    blocks = _cluster_blocks(spark, sf_dir)
-    blocks.assignments.cache()
-    blocks.meta.cache()
+    blocks = _pin_blocks(_cluster_blocks(spark, sf_dir))
     pb = Converters.blocks_to_profile_blocks(blocks)
     ctx = EdgeWeighting.weighted_edges(
         blocks, pb, WeightTypes.CHI_SQUARE, use_entropy=True
@@ -417,6 +416,7 @@ CHI2_DIVIDER = 2.0  # BLAST.ipynb default
 
 def q_er_blast_wnp(spark, sf_dir):
     from sparker_spark.blocking.converters import Converters
+    from sparker_spark.entry import _pin_blocks
     from sparker_spark.metablocking.pruning_utils import (
         ComparisonTypes,
         ThresholdTypes,
@@ -424,9 +424,7 @@ def q_er_blast_wnp(spark, sf_dir):
     from sparker_spark.metablocking.weights import EdgeWeighting
     from sparker_spark.metablocking.wnp import WNP
 
-    blocks = _cluster_blocks(spark, sf_dir)
-    blocks.assignments.cache()
-    blocks.meta.cache()
+    blocks = _pin_blocks(_cluster_blocks(spark, sf_dir))
     pb = Converters.blocks_to_profile_blocks(blocks)
     ctx = EdgeWeighting.weighted_edges(
         blocks, pb, WeightTypes.CHI_SQUARE, use_entropy=True
@@ -550,7 +548,7 @@ def q_gsmb_features(spark, sf_dir):
     from sparker_spark.entry import FILTER_R, _doc_keys_unigram
     from sparker_spark.filters import BlockFiltering, BlockPurging
 
-    keys = _doc_keys_unigram(spark, sf_dir).cache()
+    keys = _doc_keys_unigram(spark, sf_dir).localCheckpoint(eager=False)
     blocks = Blocking.blocks_from_keys(keys, clean=False, assign_ids=False)
     purged = BlockPurging.block_purging(blocks, GSMB_SMOOTH)
     _, _, rebuilt = BlockFiltering.block_filtering_quick(purged, FILTER_R)
@@ -644,20 +642,15 @@ FROM e"""
 # the pruning algebra itself is oracle-checkable; the ML scoring path
 # is exercised in tests/test_blast_supervised.py)
 # ====================================================================
-def _scored_edges(spark, sf_dir) -> DataFrame:
+def _scored_edges(spark, sf_dir) -> tuple[DataFrame, int]:
+    """The scored edges and Σ block_size of the blocks they come from:
+    one block build serves both (its pins are not shared across
+    builds)."""
     from sparker_spark.entry import _edges
 
-    _, half = _edges(spark, sf_dir, WeightTypes.JS, rounded=True)
-    return half.select("p1", "p2", F.col("weight").alias("p_match"))
-
-
-def _shingle_totals(spark, sf_dir):
-    from sparker_spark.entry import _shingle_blocks
-
-    blocks, _ = _shingle_blocks(spark, sf_dir)
-    total = blocks.meta.agg(F.sum("block_size").alias("s")).first()["s"]
-    n_docs = _load(spark, sf_dir, "documents").count()
-    return int(total), int(n_docs)
+    ctx, half = _edges(spark, sf_dir, WeightTypes.JS, rounded=True)
+    scored = half.select("p1", "p2", F.col("weight").alias("p_match"))
+    return scored, int(ctx.total_block_size)
 
 
 def _duck_scored(weight_type: str = WeightTypes.JS) -> str:
@@ -674,8 +667,7 @@ tbs AS (SELECT CAST(sum(block_size) AS BIGINT) AS total FROM blocks)"""
 
 
 def q_smb_cep(spark, sf_dir):
-    total, _ = _shingle_totals(spark, sf_dir)
-    return SupervisedMB.cep(_scored_edges(spark, sf_dir), total)
+    return SupervisedMB.cep(*_scored_edges(spark, sf_dir))
 
 
 def _o_smb_cep() -> str:
@@ -691,7 +683,7 @@ WHERE rn <= tbs.total // 2"""
 
 
 def q_smb_wep(spark, sf_dir):
-    return SupervisedMB.wep(_scored_edges(spark, sf_dir))
+    return SupervisedMB.wep(_scored_edges(spark, sf_dir)[0])
 
 
 def _o_smb_wep() -> str:
@@ -704,7 +696,7 @@ SELECT p1, p2, p_match FROM over_t, thr WHERE p_match >= thr.t"""
 
 
 def q_smb_blast(spark, sf_dir):
-    return SupervisedMB.blast(_scored_edges(spark, sf_dir))
+    return SupervisedMB.blast(_scored_edges(spark, sf_dir)[0])
 
 
 def _o_smb_blast() -> str:
@@ -734,8 +726,8 @@ t2 AS (SELECT p1, p2 FROM (
 
 
 def q_smb_cnp(spark, sf_dir):
-    total, n_docs = _shingle_totals(spark, sf_dir)
-    return SupervisedMB.cnp(_scored_edges(spark, sf_dir), total, n_docs)
+    n_docs = _load(spark, sf_dir, "documents").count()
+    return SupervisedMB.cnp(*_scored_edges(spark, sf_dir), n_docs)
 
 
 def _o_smb_cnp() -> str:
@@ -750,8 +742,8 @@ WHERE EXISTS (SELECT 1 FROM t1 WHERE t1.p1 = o.p1 AND t1.p2 = o.p2)
 
 
 def q_smb_rcnp(spark, sf_dir):
-    total, n_docs = _shingle_totals(spark, sf_dir)
-    return SupervisedMB.rcnp(_scored_edges(spark, sf_dir), total, n_docs)
+    n_docs = _load(spark, sf_dir, "documents").count()
+    return SupervisedMB.rcnp(*_scored_edges(spark, sf_dir), n_docs)
 
 
 def _o_smb_rcnp() -> str:

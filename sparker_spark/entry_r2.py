@@ -15,6 +15,8 @@ Registered into sparker_spark.entry.QUERIES alongside entry_ext.
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import functions as F
 
 from sparker_spark.blocking.blockers import Blocking
@@ -66,7 +68,7 @@ SELECT key, block_size, comparisons FROM blocks"""
 def q_er_block_filtering_scala(spark, sf_dir):
     from sparker_spark.entry import FILTER_R, SMOOTH_FACTOR, _doc_keys_unigram
 
-    keys = _doc_keys_unigram(spark, sf_dir).cache()
+    keys = _doc_keys_unigram(spark, sf_dir).localCheckpoint(eager=False)
     blocks = Blocking.blocks_from_keys(keys, clean=False, assign_ids=True)
     purged = BlockPurging.block_purging(blocks, SMOOTH_FACTOR)
     pb = Converters.blocks_to_profile_blocks(purged)
@@ -102,9 +104,9 @@ WHERE rn <= CAST(floor(n * CAST({FILTER_R} AS DOUBLE) + 0.5) AS BIGINT)"""
 def q_er_block_entropy(spark, sf_dir):
     from sparker_spark.entry import _doc_keys_unigram
 
-    keys = _doc_keys_unigram(spark, sf_dir).cache()
+    keys = _doc_keys_unigram(spark, sf_dir).localCheckpoint(eager=False)
     blocks = Blocking.blocks_from_keys(keys, clean=False, assign_ids=False)
-    blocks.meta.cache()
+    blocks = dataclasses.replace(blocks, meta=blocks.meta.localCheckpoint(eager=False))
     ent = StatisticsEstimator.block_entropy(blocks, normalized=True)
     return ent.join(blocks.meta.select("block_id", "key"), "block_id").select(
         "key",

@@ -595,7 +595,9 @@ def q_block_skew_report(spark, sf_dir):
 
     keys = _doc_keys_unigram(spark, sf_dir)
     blocks = Blocking.blocks_from_keys(keys, clean=False, assign_ids=False)
-    meta = blocks.meta.select("key", "block_size", "comparisons").cache()
+    meta = blocks.meta.select("key", "block_size", "comparisons").localCheckpoint(
+        eager=False
+    )
     # one bounded driver scalar (same class as WEP's global threshold);
     # a scalar crossJoin would plan as a nested loop
     total_comp = float(

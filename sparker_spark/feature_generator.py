@@ -96,7 +96,7 @@ class FeatureGenerator:
             "cbs",
             F.col("inv_comp_sum").alias("raccb_raw"),
             F.col("inv_size_sum").alias("rs"),
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
 
         # redundant/non-redundant comparison stats, derived by
         # symmetrizing the half-edge relation (each unordered pair

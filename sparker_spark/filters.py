@@ -10,8 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sparker_spark.blocking.blockers import BlockCollection, block_index
+from sparker_spark.blocking.blockers import BlockCollection
 from sparker_spark.blocking.converters import Converters
+from sparker_spark.session import bounded_broadcast
 
 # Python round() is banker's (half-to-even); Spark's round() is
 # half-up and DuckDB's likewise, so block filtering uses this explicit
@@ -87,7 +88,7 @@ class BlockPurging:
             return blocks
         meta = blocks.meta.where(F.col("comparisons") <= F.lit(int(threshold)))
         assignments = blocks.assignments.join(
-            block_index(meta.select("block_id"), blocks.num_blocks), "block_id"
+            bounded_broadcast(meta.select("block_id"), blocks.num_blocks), "block_id"
         )
         return BlockCollection(
             assignments=assignments,

@@ -18,12 +18,17 @@ shaped components); the jump step halves label-chain depth each round,
 giving O(log diameter) rounds total — the same reason the classic
 MapReduce formulations (large-star/small-star, Kiveris et al. 2014)
 aim at logarithmic round counts. Every round is two shuffles on node
-keys (a groupBy-min and a self-join) plus an eager ``localCheckpoint``
+keys (a groupBy-min and a self-join) plus a lazy ``localCheckpoint``
 to truncate lineage — without truncation an iterative DataFrame plan
 grows per round and re-executes from the source. Convergence is
-detected with a single scalar aggregate: labels are monotone
-non-increasing, so the label sum strictly decreases iff any label
-changed — no per-row diff join.
+detected with a single scalar aggregate, which also writes the round's
+pin: labels are monotone non-increasing, so the label sum strictly
+decreases iff any label changed — no per-row diff join.
+
+Every pin in this module is a lazy ``localCheckpoint`` that the
+returned frame owns: the first action that reads it writes it, and its
+blocks are freed when the frame is collected, so nothing is left in
+the session's cache.
 
 Determinism: the result is exactly "component = min node id reachable",
 independent of partitioning or iteration interleaving.
@@ -33,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from sparker_spark.session import bounded_broadcast
 
 
 class ConnectedComponents:
@@ -96,10 +103,10 @@ class ConnectedComponents:
             )
             .where(F.col("u") != F.col("v"))
         )
-        # materialize the edge relation once: the regime count below,
-        # and then either the driver collect or the distributed loop's
-        # every round, consume it
-        e = e.localCheckpoint(eager=True)
+        # pin the edge relation: the regime count below writes it, and
+        # then either the driver collect or the distributed loop's
+        # every round reads it
+        e = e.localCheckpoint(eager=False)
         n_edges = e.count()
         if n_edges <= ConnectedComponents.DRIVER_UNIONFIND_MAX:
             spark = e.sparkSession
@@ -134,7 +141,7 @@ class ConnectedComponents:
         und = (
             e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
             .distinct()
-            .cache()
+            .localCheckpoint(eager=False)
         )
         node_rel = und.select("u")
         if nodes is not None:
@@ -149,7 +156,7 @@ class ConnectedComponents:
             node_rel.distinct()
             .join(nbr_min0, "u", "left")
             .select("u", F.least("u", F.coalesce("nv", "u")).alias("c"))
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
         prev_sum = labels.agg(F.sum("c")).first()[0]
         for _ in range(max_iter):
@@ -171,13 +178,12 @@ class ConnectedComponents:
             l2 = l1.join(jump, "c", "left").select(
                 "u", F.least("c", F.coalesce("cc", "c")).alias("c")
             )
-            new_labels = l2.localCheckpoint(eager=True)
+            new_labels = l2.localCheckpoint(eager=False)
             new_sum = new_labels.agg(F.sum("c")).first()[0]
             labels = new_labels
             if new_sum == prev_sum:
                 break
             prev_sum = new_sum
-        und.unpersist()
         return labels.select(
             F.col("u").alias("node"), F.col("c").alias("component")
         )
@@ -239,22 +245,28 @@ class PageRank:
             directed = edges.select(
                 F.col("p1").alias("src"), F.col("p2").alias("dst")
             )
-        directed = directed.distinct().cache()
+        directed = directed.distinct().localCheckpoint(eager=False)
         nodes = (
             directed.select(F.col("src").alias("node"))
             .unionByName(directed.select(F.col("dst").alias("node")))
             .distinct()
-            .cache()
+            .localCheckpoint(eager=False)
         )
+        # writes both pins, and bounds every node-sized build side below
         n = nodes.count()
         if n == 0:  # empty graph: nothing to rank
             return nodes.select(
                 F.col("node"), F.lit(0.0).alias("pagerank")
             )
-        # out-degrees are loop-invariant: cache the node-sized relation
+        # out-degrees are loop-invariant: pin the node-sized relation
         # once instead of re-deriving it from the edge relation inside
         # every iteration's plan
-        outdeg = directed.groupBy("src").agg(F.count("*").alias("deg")).cache()
+        outdeg = bounded_broadcast(
+            directed.groupBy("src")
+            .agg(F.count("*").alias("deg"))
+            .localCheckpoint(eager=False),
+            n,
+        )
         base = (1.0 - d) / n
         inter_digits = ndigits + 4
         # initial score via the same floor-formula rounding the oracle
@@ -271,7 +283,7 @@ class PageRank:
             # node-sized pr ⋈ outdeg relation and then attaching it to
             # the edges yields bit-identical per-edge terms while the
             # edge relation is joined once per iteration instead of
-            # twice (guide §2.4 — the old plan walked the cached edge
+            # twice (guide §2.4 — the old plan walked the edge
             # relation through two shuffled joins per round)
             per_src = pr.join(outdeg, pr.node == outdeg.src).select(
                 "src",
@@ -280,14 +292,16 @@ class PageRank:
                 .alias("c"),
             )
             contrib = (
-                directed.join(per_src, "src")
+                directed.join(bounded_broadcast(per_src, n), "src")
                 .select(F.col("dst").alias("node"), "c")
                 .groupBy("node")
                 # exact DECIMAL sum of pre-rounded terms: aggregation
                 # order cannot change the total (same trick as Decay)
                 .agg(F.sum("c").cast("double").alias("in_sum"))
             )
-            pr = nodes.join(contrib, "node", "left").select(
+            pr = nodes.join(
+                bounded_broadcast(contrib, n), "node", "left"
+            ).select(
                 "node",
                 rnd(
                     F.lit(base) + F.lit(d) * F.coalesce("in_sum", F.lit(0.0)),
@@ -385,10 +399,9 @@ class Triangles:
         # reference the orientation three more — left lazy, an
         # expensive upstream (e.g. a MinHash-LSH pair pipeline)
         # re-runs per reference (measured 13.1 s -> 3.4 s for the
-        # sf0.1 near-dup triangle query). Checkpoint blocks are freed
-        # by GC — the repo's multi-consumer idiom.
-        edges = edges.localCheckpoint(eager=True)
-        o = Triangles.orient(edges).localCheckpoint(eager=True)
+        # sf0.1 near-dup triangle query).
+        edges = edges.localCheckpoint(eager=False)
+        o = Triangles.orient(edges).localCheckpoint(eager=False)
         # wedges around the ordered orientation: lo -> m1, lo -> m2
         w = (
             o.select(F.col("lo").alias("x"), F.col("hi").alias("m1"))

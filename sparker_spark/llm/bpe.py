@@ -22,7 +22,7 @@ byte-level pre-mapping).
 Scale posture:
 
 * ``train`` is the fully-distributed loop: per merge, one pair-count
-  aggregate and one symbol-rewrite projection over the cached vocab
+  aggregate and one symbol-rewrite projection over the pinned vocab
   relation — two keyed jobs per merge, no driver-resident vocab. The
   per-merge job overhead makes it the right path for moderate merge
   counts or vocabularies too large to collect.
@@ -454,9 +454,8 @@ class BPE:
 
         Each iteration: one pair-count aggregate (a bounded top-K
         collect — driver-scalar class, like a purging threshold) and
-        one symbol-rewrite projection, with the vocab state
-        re-materialized via localCheckpoint (GC-freed; no
-        session-pinned caches).
+        one symbol-rewrite projection, with the vocab state re-pinned
+        by a lazy localCheckpoint that the next pair count writes.
 
         ``batch_pairs``: apply up to N merges per iteration — the
         SAME merge table as one-at-a-time (see :meth:`_select_batch`
@@ -519,7 +518,7 @@ class BPE:
             )
             merges = [(k, l, r, l + r) for k, l, r in ordered]
             merged_seen = {l + r for _, l, r in ordered}
-        state = state.localCheckpoint(eager=True)
+        state = state.localCheckpoint(eager=False)
         while len(merges) < num_merges:
             top_k = max(8, 4 * batch_pairs)
             top = (
@@ -552,7 +551,7 @@ class BPE:
                 BPE._merge_batch_expr(
                     F.col("syms"), [(l, r) for l, r, _ in kept]
                 ),
-            ).localCheckpoint(eager=True)
+            ).localCheckpoint(eager=False)
         return spark.createDataFrame(
             merges, "rank int, left string, right string, merged string"
         )
@@ -948,7 +947,7 @@ class BPEVocab:
                 base.unionByName(merged)
                 .groupBy("token")
                 .agg(F.min("token_id").alias("token_id"))
-                .localCheckpoint(eager=True)
+                .localCheckpoint(eager=False)
             )
         chars = (
             BPE.word_vocab(docs, text_col)
@@ -976,7 +975,7 @@ class BPEVocab:
             .unionByName(merged)
             .groupBy("token")
             .agg(F.min("token_id").alias("token_id"))
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
 
     @staticmethod

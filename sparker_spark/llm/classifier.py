@@ -61,7 +61,7 @@ class QualityClassifier:
         bkts = ImportanceSelection._bucket_array_sql(text_col, b)
         base = documents.select(
             "doc_id", F.expr(bkts).alias("_bkts")
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
         # the positive class: a predicate over ``documents``, or a
         # (doc_id) relation — curate() passes the latter because its
         # working frame is column-pruned to (doc_id, text) while weak

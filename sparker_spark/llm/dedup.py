@@ -74,17 +74,14 @@ class Dedup:
         if plan not in ("auto", "naive", "prefix"):
             raise ValueError("plan must be one of 'auto', 'naive', 'prefix'")
         t = float(threshold)
-        # localCheckpoint (not cache): the stats probe (auto) plus
-        # every branch's multiple legs (freq/ordered/sizes in the
-        # prefix join; counts + both join sides in the naive one)
-        # would otherwise re-derive the tokenize+shingle+hash lineage
-        # per leg. Unlike .cache(), checkpoint blocks are freed by GC
-        # when this frame goes out of scope, so long-lived sessions
-        # (registry sweeps, curate pipelines) don't accumulate
-        # never-unpersisted relations.
+        # pin the shingle relation: the stats probe (auto) plus every
+        # branch's multiple legs (freq/ordered/sizes in the prefix
+        # join; counts + both join sides in the naive one) would
+        # otherwise re-derive the tokenize+shingle+hash lineage per
+        # leg. The probe, or the first leg that runs, writes the pin.
         sh = shingle_hashes(documents, shingle_size).select(
             "doc_id", F.col("h").alias("tok")
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
         if plan == "auto":
             stats = (
                 sh.groupBy("tok")
@@ -181,12 +178,16 @@ class Dedup:
         assert num_hashes % bands == 0
         rows = num_hashes // bands
         # the shingle relation feeds four plan legs (signatures, the
-        # two verification sides, per-doc counts) — without a cache the
+        # two verification sides, per-doc counts) — without a pin the
         # tokenize+shingle+md5 pass and the corpus scan run once per
-        # leg (6 parquet scans in the physical plan). MEMORY_AND_DISK
-        # spills rather than OOMs when the shingle relation outgrows
-        # executor memory at scale.
-        sh = shingle_hashes(documents, shingle_size).select("doc_id", "h", "h31").cache()
+        # leg (6 parquet scans in the physical plan). A local
+        # checkpoint is stored MEMORY_AND_DISK, so it spills rather
+        # than OOMs when the shingle relation outgrows executor memory.
+        sh = (
+            shingle_hashes(documents, shingle_size)
+            .select("doc_id", "h", "h31")
+            .localCheckpoint(eager=False)
+        )
         sigs = sh.groupBy("doc_id").agg(
             *[
                 F.min(F.expr(minhash_expr(a, b, "h31"))).alias(f"mh_{i}")
@@ -298,10 +299,13 @@ class Dedup:
         exact band — then verify with bit_count(xor)."""
         nbands = max_hamming + 1
         band_bits = bits // nbands
-        # cache: both sides of the bucket self-join consume the
-        # fingerprints; without it the token hash + 32-way bit
-        # aggregation runs twice
-        fps = Dedup.simhash_fingerprints(documents, bits).cache()
+        # no pin: both sides of the bucket self-join read the same
+        # fingerprint aggregate, whose token shuffle AQE reuses, and
+        # the probe side keeps its doc_id partitioning, so the
+        # candidate distinct needs no exchange. A pin carries no
+        # partitioning: it measured one more shuffle (+42 % bytes at
+        # sf0.01) for the one aggregate pass it saves.
+        fps = Dedup.simhash_fingerprints(documents, bits)
         band_cols = [
             F.concat_ws(
                 "_",
@@ -414,7 +418,7 @@ class Dedup:
                 "sqrt(aggregate(transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
                 " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))"
             ).alias("norm"),
-        ).cache()  # consumed by the signature pass and both verify sides
+        ).localCheckpoint(eager=False)  # read by the signature pass and both verify sides
 
         def bit(j: int):
             plane = F.array(*[F.lit(x) for x in planes[j]])

@@ -207,7 +207,7 @@ class MixPlanner:
         # sample_to_budget): the totals collect below and the returned
         # plan's own execution would otherwise each re-tokenize the
         # whole corpus
-        counts = counts.localCheckpoint(eager=True)
+        counts = counts.localCheckpoint(eager=False)
         plan = MixPlanner._plan_from_counts(counts, weights, budget)
         totals = [
             (r["source"], r["available_tokens"])
@@ -253,14 +253,14 @@ class MixPlanner:
         (the water-filled ``renorm_rate`` when ``renormalize=True``).
         Semi-join back on doc_id to carry full rows downstream.
 
-        The per-document counts relation is materialized ONCE (eager
-        localCheckpoint, GC-freed) and feeds both the plan's totals
-        aggregate and the sample's filter leg — the corpus is
-        tokenized exactly once, which is the dominant cost of the
-        whole operator."""
+        The per-document counts relation is pinned ONCE (a lazy
+        localCheckpoint that the result owns) and feeds both the
+        plan's totals aggregate and the sample's filter leg — the
+        corpus is tokenized exactly once, which is the dominant cost
+        of the whole operator."""
         counts = _doc_counts(
             docs, text_col, source_col, id_col, counts_col
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
         plan = MixPlanner._plan_from_counts(counts, weights, budget)
         if renormalize:
             totals = [
@@ -312,7 +312,7 @@ class MixPlanner:
         broadcast join, one bounded sequence() explode."""
         counts = _doc_counts(
             docs, text_col, source_col, id_col, counts_col
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
         plan = MixPlanner._plan_from_counts(counts, weights, budget)
         rates = plan.select(
             "source",

@@ -206,7 +206,7 @@ class ImportanceSelection:
         bkts = ImportanceSelection._bucket_array_sql(text_col, b)
         base = documents.select(
             "doc_id", F.expr(bkts).alias("_bkts")
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
         occ = base.select(F.explode("_bkts").alias("bucket"))
         raw = occ.groupBy("bucket").agg(F.count("*").alias("cr"))
         tgt_ids = documents.where(target_predicate).select("doc_id")

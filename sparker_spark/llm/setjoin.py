@@ -57,12 +57,11 @@ class SetSimilarityJoin:
         # The token relation feeds THREE consumers (frequency counts,
         # the ordering join, and the verification arrays) and the
         # prefix relation feeds both sides of the candidate self-join
-        # — materialize each once (localCheckpoint, freed by GC: the
-        # repo's multi-consumer idiom). Left lazy, Spark re-runs the
-        # tokenize+distinct and the per-document ordering window per
-        # consumer: measured 43 s vs 3 s for the candidate stage at
-        # sf0.1.
-        toks = toks.localCheckpoint(eager=True)
+        # — pin each once with a lazy localCheckpoint that the result
+        # owns. Left unpinned, Spark re-runs the tokenize+distinct and
+        # the per-document ordering window per consumer: measured 43 s
+        # vs 3 s for the candidate stage at sf0.1.
+        toks = toks.localCheckpoint(eager=False)
         # ascending document frequency; token value breaks ties so the
         # ordering (and therefore each prefix) is fully deterministic.
         # Prefix membership only depends on each document's OWN
@@ -93,7 +92,7 @@ class SetSimilarityJoin:
             toks = (
                 toks.join(vocab, "tok")
                 .select("doc_id", F.col("tid").alias("tok"), "df")
-                .localCheckpoint(eager=True)
+                .localCheckpoint(eager=False)
             )
             ordered = toks
         else:
@@ -108,7 +107,7 @@ class SetSimilarityJoin:
                 F.col("pos") <= F.col("n") - F.ceil(F.lit(t) * F.col("n")) + 1
             )
             .select("doc_id", "tok", "n")
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
 
         # PPJoin length filter rides on the candidate join: Jaccard

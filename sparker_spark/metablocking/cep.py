@@ -46,7 +46,7 @@ class CEP:
         # lineage twice (boundary sampling + shuffle). ctx.materialize()
         # here measured SLOWER (4.1 s vs 3.5 s at sf0.1) when it was an
         # EAGER pin: its own job wrote the full edge relation, which
-        # cost more than re-running the weighting over the cached block
+        # cost more than re-running the weighting over the pinned block
         # relations. The lazy pin is no better: `er_cep_cbs` at sf0.01
         # (local[4]) runs 23 jobs with it and 21 without. Left
         # unmaterialized deliberately.

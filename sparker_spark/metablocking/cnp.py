@@ -20,13 +20,10 @@ from pyspark.sql import functions as F
 from sparker_spark.blocking.blockers import BlockCollection
 from sparker_spark.metablocking.pruning_utils import ComparisonTypes, WeightTypes
 from sparker_spark.metablocking.weights import EdgeContext, EdgeWeighting
+from sparker_spark.session import bounded_broadcast
 
 
 class CNP:
-    # broadcast the per-profile top-k retained relation when it has at
-    # most this many rows (~150 MB hashed); see WNP's threshold cap
-    BROADCAST_RETAINED_MAX = 2_000_000
-
     @staticmethod
     def compute_cnp_threshold(blocks: BlockCollection, number_of_profiles: int) -> int:
         total = blocks.meta.agg(F.sum("block_size").alias("s")).first()["s"] or 0
@@ -50,27 +47,27 @@ class CNP:
     ) -> DataFrame:
         if comparison_type not in (ComparisonTypes.AND, ComparisonTypes.OR):
             raise ValueError(f"invalid comparison type: {comparison_type}")
-        # pin the edges: the top-k checkpoint below writes the lazy
-        # pin, and the half leg reads it instead of re-enumerating
+        # pin the edges: the top-k count below writes the lazy pin,
+        # and the half leg reads it instead of re-enumerating
         ctx.materialize()
         # Same plan policy as WNP's threshold joins: the retained
-        # relation is at most k rows per profile — checkpoint it once
-        # and broadcast both membership joins when small, keeping the
-        # materialized edge relation exchange-free on the prune leg.
-        # The row-count guard keeps huge collections on the shuffled
-        # join.
-        retained = CNP.retained_neighbors(ctx, k).localCheckpoint(eager=True)
-        small = retained.count() <= CNP.BROADCAST_RETAINED_MAX
+        # relation is at most k rows per profile. Its pin is written
+        # by the count, which bounds both membership joins' build
+        # side: they broadcast when it fits, keeping the pinned edge
+        # relation exchange-free on the prune leg.
+        retained = CNP.retained_neighbors(ctx, k).localCheckpoint(eager=False)
+        n_retained = retained.count()
         half = ctx.half()
-        # kept_by_p1: (p1,p2) where p2 is in p1's top-k
-        by_p1 = retained.select(
-            F.col("src").alias("p1"), F.col("dst").alias("p2"), F.lit(1).alias("r1")
+        # by_p1: (p1, p2) where p2 is in p1's top-k; by_p2 the mirror
+        by_p1, by_p2 = (
+            bounded_broadcast(
+                retained.select(
+                    F.col(a).alias("p1"), F.col(b).alias("p2"), F.lit(1).alias(r)
+                ),
+                n_retained,
+            )
+            for a, b, r in (("src", "dst", "r1"), ("dst", "src", "r2"))
         )
-        by_p2 = retained.select(
-            F.col("dst").alias("p1"), F.col("src").alias("p2"), F.lit(1).alias("r2")
-        )
-        if small:
-            by_p1, by_p2 = F.broadcast(by_p1), F.broadcast(by_p2)
         joined = half.join(by_p1, ["p1", "p2"], "left").join(
             by_p2, ["p1", "p2"], "left"
         )

@@ -48,9 +48,9 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sparker_spark.blocking.blockers import BlockCollection, block_index
+from sparker_spark.blocking.blockers import BlockCollection
 from sparker_spark.metablocking.pruning_utils import WeightTypes
-from sparker_spark.session import shuffle_partitions
+from sparker_spark.session import bounded_broadcast, shuffle_partitions
 
 EPS = 0.00000000001  # EJS epsilon guard, common_node_pruning.py:218,228
 
@@ -95,10 +95,11 @@ def _shared_block_pairs(
     ``blocks.meta`` bounded by ``num_blocks``, and the ``dst`` side of
     the self-join is the membership relation bounded by
     ``num_members``; each is broadcast when its bound says it fits
-    (:func:`block_index`), so the enumeration shuffles only on the
-    pair key. Without a bound the plan is Catalyst's: it shuffles
-    every membership on ``bid``, and AQE at best turns the join into a
-    broadcast read from that shuffle's output.
+    (:func:`~sparker_spark.session.bounded_broadcast`), so the
+    enumeration shuffles only on the pair key. Without a bound the plan
+    is Catalyst's: it shuffles every membership on ``bid``, and AQE at
+    best turns the join into a broadcast read from that shuffle's
+    output.
     """
     sums = sums or {}
     if (
@@ -118,7 +119,7 @@ def _shared_block_pairs(
         # (assignment-sized) instead of joining meta onto the Σ size²
         # enumerated relation
         a = a.join(
-            block_index(
+            bounded_broadcast(
                 blocks.meta.select(
                     F.col("block_id").alias("bid"),
                     *[c.alias(name) for name, c in sums.items()],
@@ -127,7 +128,7 @@ def _shared_block_pairs(
             ),
             "bid",
         )
-    b = block_index(
+    b = bounded_broadcast(
         blocks.assignments.select(
             F.col("block_id").alias("bid"),
             F.col("profile_id").alias("dst"),
@@ -204,15 +205,14 @@ def _bitmask_pairs(
     asg = blocks.assignments.select(
         F.col("block_id").alias("bid"), F.col("profile_id").alias("pid")
     ).withColumn("bit", bit_map[F.col("bid")])
-    # checkpoint BEFORE counting: the count then reads the stored
-    # relation instead of running the mask aggregation once for the
-    # count and again for the checkpoint, and both tiers below consume
-    # masks 2-3× (distributed per-executor blocks — #profiles rows
-    # never touch the driver)
+    # pin BEFORE counting: the count writes the pin, so the mask
+    # aggregation runs once, and both tiers below consume masks 2-3×
+    # (distributed per-executor blocks — #profiles rows never touch
+    # the driver)
     masks = (
         asg.groupBy("pid")
         .agg(F.expr("bit_or(bit)").alias("mask"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     n_profiles = masks.count()
 
@@ -542,9 +542,10 @@ class EdgeWeighting:
             # statistics (tests/test_multi3_parity.py pins parity with
             # the reference formula fed corrected stats).
             # co is consumed by three legs (the edge join, the stats
-            # aggregate, the distinct-edge count) — checkpoint it once
-            # so the enumeration shuffle doesn't run three times.
-            co = co.localCheckpoint(eager=True)
+            # aggregate, the distinct-edge count) — pin it once (the
+            # count writes the pin) so the enumeration shuffle doesn't
+            # run three times.
+            co = co.localCheckpoint(eager=False)
             per_profile = co.groupBy("src").agg(F.count("*").alias("e_cnt"))
             num_edges = co.where(F.col("src") < F.col("dst")).count()
         e = co

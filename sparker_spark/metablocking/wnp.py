@@ -23,14 +23,10 @@ from sparker_spark.metablocking.pruning_utils import (
     WeightTypes,
 )
 from sparker_spark.metablocking.weights import EdgeContext, EdgeWeighting
+from sparker_spark.session import bounded_broadcast
 
 
 class WNP:
-    # broadcast the per-profile threshold relation when it has at most
-    # this many rows (~150 MB hashed); larger collections keep the
-    # shuffled join — a billion-profile run must not OOM the driver
-    BROADCAST_THRESHOLDS_MAX = 2_000_000
-
     @staticmethod
     def calc_thresholds(ctx: EdgeContext, threshold_type: str) -> DataFrame:
         """(profile_id, threshold) — wnp.py:192-229.
@@ -78,61 +74,39 @@ class WNP:
         # and the half leg reads it instead of re-enumerating
         ctx.materialize()
         # Broadcast the (profile, threshold) relation into BOTH
-        # endpoint joins when it is small: thresholds is #profiles
-        # rows, orders of magnitude below the edge relation, and
+        # endpoint joins when it fits: thresholds is #profiles rows,
+        # orders of magnitude below the edge relation, and
         # broadcast-hash joins remove the edge relation's exchange
-        # from the prune leg entirely. The row-count guard keeps a
-        # billion-profile run off the broadcast plan; on that large
-        # path the thresholds are eagerly checkpointed so the two
-        # shuffled join legs don't each recompute the aggregate.
+        # from the prune leg entirely. Every profile with an edge sits
+        # in at least one block, so Σ block_size (collected with
+        # #blocks, no extra job) bounds #profiles from above; too
+        # large a bound leaves the joins to Catalyst.
         thresholds = WNP.calc_thresholds(ctx, threshold_type)
-        # guard size = #distinct profiles (the thresholds relation's
-        # true size). Every profile with an edge sits in at least one
-        # block, so Σ block_size (collected with #blocks, no extra
-        # job) bounds it from above and decides the common small case.
-        # Σ block_size overstates #profiles by the avg-blocks-per-
-        # profile factor, so above the cap an approximate distinct
-        # over the membership relation refines it; the guard doesn't
-        # need exactness.
-        small = ctx.total_block_size <= WNP.BROADCAST_THRESHOLDS_MAX
-        if not small:
-            # approx_count_distinct's ~5 % rsd can UNDERestimate a
-            # just-over-the-limit relation; shrink the effective
-            # threshold on this path so estimator error can't admit an
-            # oversized broadcast (a false negative only costs the
-            # shuffled plan, which is correct anyway)
-            n_profiles = ctx.profiles.agg(
-                F.approx_count_distinct("profile_id").alias("n")
-            ).first()["n"]
-            small = n_profiles <= 0.9 * WNP.BROADCAST_THRESHOLDS_MAX
-        # t1/t2 are independent plan legs, so on the broadcast path the
-        # threshold aggregate runs once per build. That is only safe
-        # when the aggregate is merge-order-invariant: MAX is, and AVG
-        # over the integer-valued CBS weights sums exactly in doubles —
-        # but AVG over fractional weights (JS/ECBS/chi2/ARCS/EJS) can
-        # differ in the last ulp between the two builds, flipping edges
-        # that tie a threshold exactly under AND/OR. Those pin ONE
-        # snapshot with a LAZY localCheckpoint (materialized by the
-        # first broadcast build, reused by the second); CBS/MAX keep
-        # the uncheckpointed plan, which measures ~2x faster on the hot
-        # shingle leg (no collect-and-persist round-trip).
-        needs_pin = (
+        # t1/t2 are independent plan legs, so the threshold aggregate
+        # can run once per leg. That is only safe when the aggregate
+        # is merge-order-invariant: MAX is, and AVG over the
+        # integer-valued CBS weights sums exactly in doubles — but AVG
+        # over fractional weights (JS/ECBS/chi2/ARCS/EJS) can differ
+        # in the last ulp between the two legs, flipping edges that
+        # tie a threshold exactly under AND/OR. Those pin ONE snapshot
+        # with a lazy localCheckpoint (written by the first leg, read
+        # by the second); CBS/MAX keep the unpinned plan, which
+        # measures ~2x faster on the hot shingle leg.
+        if (
             threshold_type == ThresholdTypes.AVG
             and ctx.weight_type != WeightTypes.CBS
-        )
-        if not small:
-            thresholds = thresholds.localCheckpoint(eager=True)
-        elif needs_pin:
+        ):
             thresholds = thresholds.localCheckpoint(eager=False)
         half = ctx.half()
-        t1 = thresholds.select(
-            F.col("profile_id").alias("p1"), F.col("threshold").alias("t1")
+        t1, t2 = (
+            bounded_broadcast(
+                thresholds.select(
+                    F.col("profile_id").alias(p), F.col("threshold").alias(t)
+                ),
+                ctx.total_block_size,
+            )
+            for p, t in (("p1", "t1"), ("p2", "t2"))
         )
-        t2 = thresholds.select(
-            F.col("profile_id").alias("p2"), F.col("threshold").alias("t2")
-        )
-        if small:
-            t1, t2 = F.broadcast(t1), F.broadcast(t2)
         joined = half.join(t1, "p1").join(t2, "p2")
         if ctx.weight_type == WeightTypes.CHI_SQUARE:
             # BLAST rule, wnp.py:47-60

@@ -6,7 +6,7 @@ Resolution" (arXiv:1905.06385).
 
 Progressive emission is inherently a driver-pull iterator (SURVEY §4);
 the reference keeps driver PriorityQueues fed from broadcast-index
-mapPartitions jobs. Here the weighted edge relation is a cached
+mapPartitions jobs. Here the weighted edge relation is a pinned
 DataFrame and every refill is a distributed window top-k over a
 mini-batch of profiles — no O(max_id) arrays, no broadcast block index.
 """
@@ -89,12 +89,11 @@ class PPS:
         self._edges = (
             ctx.edges.where(F.col("src") < F.col("dst"))
             .select("src", "dst", "weight")
-            .cache()
+            .localCheckpoint(eager=False)
         )
-        # materialize once, distributed; both sorted streams below
-        # re-read the checkpointed rows instead of re-running the
-        # group-by per stream (blocks freed by GC, the repo idiom)
-        init = PPS.init_frame(self._edges).localCheckpoint(eager=True)
+        # pin once, distributed; both sorted streams below re-read the
+        # pinned rows instead of re-running the group-by per stream
+        init = PPS.init_frame(self._edges).localCheckpoint(eager=False)
         self._top1_iter = (
             init.select(
                 "src",
@@ -286,12 +285,14 @@ class GSPSN:
         )
 
     def initialize(self):
-        """Cache the comparison relation and pull the first page.
+        """Pin the comparison relation and pull the first page.
         Pages stream from one globally-sorted local iterator (see
         _refill), so the driver never holds more than one page beyond
         what it already emitted and a full drain is one sort + one
         scan."""
-        self._comparisons = self.compute_comparisons().cache()
+        self._comparisons = self.compute_comparisons().localCheckpoint(
+            eager=False
+        )
         self._rows_iter = None
         self._exhausted = False
         self._refill()
@@ -301,7 +302,7 @@ class GSPSN:
         pass over the comparison relation. ``toLocalIterator`` streams
         the range-partitioned sort output partition-by-partition in
         order, so a full drain costs one sort + one scan — the
-        keyset-cursor predecessor re-filtered and re-sorted the cached
+        keyset-cursor predecessor re-filtered and re-sorted the pinned
         relation once per page (O(pages × scan)). Emission order is
         the identical total order (weight desc, p1, p2), so page size
         remains observation-free."""

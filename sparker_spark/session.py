@@ -15,7 +15,8 @@ import re
 import threading
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # serializes scoped_conf blocks: session conf is shared by every thread
 # that holds the session
@@ -83,6 +84,29 @@ def broadcast_threshold(spark: SparkSession) -> int | None:
         return None
     n = int(m.group(1)) << _BYTE_SHIFTS[m.group(2)]
     return n if n > 0 else None
+
+
+# Spark's default per-value size estimates (DataType.defaultSize) by
+# type name; a row adds an 8-byte header (EstimationUtils.getSizePerRow)
+_DEFAULT_SIZE = {"integer": 4, "long": 8, "double": 8, "string": 20}
+
+
+def bounded_broadcast(df: DataFrame, rows: int | None) -> DataFrame:
+    """``df`` — a relation with at most ``rows`` rows — as the build
+    side of a join: broadcast-hinted when the bound times the
+    estimated row width is within ``spark.sql.autoBroadcastJoinThreshold``,
+    and left to Catalyst with no bound or no threshold (-1).
+
+    This is the package's one size-aware broadcast rule. Its build
+    sides are pins (or projections of pins), and a ``localCheckpoint``
+    carries Spark's plan estimate (often gigabytes) rather than its
+    size, so Catalyst never broadcasts them on its own; the caller's
+    bound is a count it already holds."""
+    threshold = broadcast_threshold(df.sparkSession)
+    if rows is None or threshold is None:
+        return df
+    width = 8 + sum(_DEFAULT_SIZE.get(f.dataType.typeName(), 8) for f in df.schema)
+    return F.broadcast(df) if rows * width <= threshold else df
 
 
 @contextmanager

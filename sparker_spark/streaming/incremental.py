@@ -199,9 +199,9 @@ def build_near_dup_index(
         # projections re-reference the corpus_hashes alias, which
         # project-collapse inlines into extra evaluations of the md5
         # HOF per row (the index build measured 14.5 s at sf0.1; ~3 s
-        # materialized). localCheckpoint blocks are freed by GC — the
-        # repo's multi-consumer idiom.
-        .localCheckpoint(eager=True)
+        # materialized). The pin is a lazy localCheckpoint that the
+        # two returned frames own; the first write fills it.
+        .localCheckpoint(eager=False)
     )
     postings = base.select(
         F.explode("corpus_bands").alias("bucket"), "corpus_id", "corpus_bands"

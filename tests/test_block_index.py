@@ -17,7 +17,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from sparker_spark.blocking.blockers import Blocking, BlockCollection, block_index
+from sparker_spark.blocking.blockers import Blocking, BlockCollection
 from sparker_spark.blocking.converters import Converters
 from sparker_spark.blocking.strategies import BlockingKeysStrategies
 from sparker_spark.filters import BlockFiltering, BlockPurging
@@ -28,7 +28,7 @@ from sparker_spark.metablocking.pruning_utils import (
 )
 from sparker_spark.metablocking.weights import EdgeWeighting, _shared_block_pairs
 from sparker_spark.metablocking.wnp import WNP
-from sparker_spark.session import scoped_conf
+from sparker_spark.session import bounded_broadcast, scoped_conf
 from sparker_spark.wrappers import DataFrameWrapper
 
 THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
@@ -131,10 +131,10 @@ def test_block_index_threshold_is_inclusive(spark, profiles):
     n = blocks.num_blocks
     for threshold, hinted in ((n * 16, True), (n * 16 - 1, False)):
         with scoped_conf(spark, {THRESHOLD: str(threshold)}):
-            assert _hinted(block_index(index, n)) is hinted
+            assert _hinted(bounded_broadcast(index, n)) is hinted
     with scoped_conf(spark, {THRESHOLD: "10MB"}):
-        assert _hinted(block_index(index, n))
-        assert not _hinted(block_index(index, None))  # no bound, no hint
+        assert _hinted(bounded_broadcast(index, n))
+        assert not _hinted(bounded_broadcast(index, None))  # no bound, no hint
 
 
 def test_num_blocks_bound(profiles):

@@ -24,6 +24,7 @@ from sparker_spark.metablocking.pruning_utils import (
 from sparker_spark.metablocking.weights import EdgeWeighting
 from sparker_spark.metablocking.wep import WEP
 from sparker_spark.metablocking.wnp import WNP
+from sparker_spark.session import scoped_conf
 from sparker_spark.supervised import SupervisedMB
 from sparker_spark.wrappers import DataFrameWrapper
 
@@ -258,10 +259,16 @@ def test_evaluation(spark, blocks):
     assert stats.pq == pytest.approx(2 / 6)
 
 
-def test_wnp_broadcast_and_shuffled_paths_agree(blocks, monkeypatch):
-    """The broadcast-thresholds fast path and the shuffled-join fallback
-    (engaged when the threshold relation exceeds the row cap) must keep
-    the identical edge set."""
+def _shuffled(spark):
+    """No broadcast at all: neither a size-hinted build side nor one
+    that AQE picks."""
+    return scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})
+
+
+def test_wnp_broadcast_and_shuffled_paths_agree(spark, blocks):
+    """The broadcast-thresholds plan and the shuffled-join plan
+    (engaged when Σ block_size rows do not fit the broadcast
+    threshold) must keep the identical edge set."""
     pb = Converters.blocks_to_profile_blocks(blocks)
 
     def run():
@@ -271,40 +278,49 @@ def test_wnp_broadcast_and_shuffled_paths_agree(blocks, monkeypatch):
         )
 
     broadcast = run()
-    monkeypatch.setattr(WNP, "BROADCAST_THRESHOLDS_MAX", 0)
-    shuffled = run()
+    with _shuffled(spark):
+        shuffled = run()
     assert broadcast == shuffled == {(0, 1)}
 
 
-def test_wnp_large_path_matches_broadcast_path(blocks):
-    """The >2M-profile guard switches prune onto checkpointed
-    thresholds + shuffled joins; the 100x perf slice cannot reach the
-    crossover (500k profiles), so force it and pin result equality
-    with the broadcast plan."""
+def test_wnp_large_path_matches_broadcast_path(spark, blocks):
+    """A collection too large for the broadcast threshold keeps the
+    shuffled joins; the 100x perf slice cannot reach the crossover, so
+    force it with the conf and pin result equality with the broadcast
+    plan, for CBS and BLAST's chi2 rule (a pinned fractional AVG)."""
     pb = Converters.blocks_to_profile_blocks(blocks)
-    ctx = EdgeWeighting.weighted_edges(blocks, pb, WeightTypes.CBS)
-    small = edge_map(WNP.prune(ctx, ThresholdTypes.AVG, ComparisonTypes.OR))
-    old = WNP.BROADCAST_THRESHOLDS_MAX
-    WNP.BROADCAST_THRESHOLDS_MAX = 0
-    try:
-        ctx2 = EdgeWeighting.weighted_edges(blocks, pb, WeightTypes.CBS)
-        large = edge_map(
-            WNP.prune(ctx2, ThresholdTypes.AVG, ComparisonTypes.OR)
-        )
-    finally:
-        WNP.BROADCAST_THRESHOLDS_MAX = old
-    assert large == small == {(0, 1): 2.0}
 
-    # BLAST chi2 rule through the large path too
-    ctxc = EdgeWeighting.weighted_edges(blocks, pb, WeightTypes.CHI_SQUARE)
-    blast_small = set(edge_map(WNP.prune(ctxc, chi2divider=2.0)))
-    WNP.BROADCAST_THRESHOLDS_MAX = 0
-    try:
-        ctxc2 = EdgeWeighting.weighted_edges(blocks, pb, WeightTypes.CHI_SQUARE)
-        blast_large = set(edge_map(WNP.prune(ctxc2, chi2divider=2.0)))
-    finally:
-        WNP.BROADCAST_THRESHOLDS_MAX = old
+    def run(weight_type, **kw):
+        ctx = EdgeWeighting.weighted_edges(blocks, pb, weight_type)
+        return edge_map(WNP.prune(ctx, **kw))
+
+    small = run(WeightTypes.CBS)
+    blast_small = run(WeightTypes.CHI_SQUARE, chi2divider=2.0)
+    with _shuffled(spark):
+        large = run(WeightTypes.CBS)
+        blast_large = run(WeightTypes.CHI_SQUARE, chi2divider=2.0)
+    assert large == small == {(0, 1): 2.0}
     assert blast_large == blast_small
+
+
+@pytest.mark.parametrize("comparison", [ComparisonTypes.OR, ComparisonTypes.AND])
+def test_cnp_broadcast_and_shuffled_paths_agree(spark, blocks, comparison):
+    """CNP's membership joins broadcast the retained set when its
+    count fits the threshold and shuffle otherwise: same edges."""
+    pb = Converters.blocks_to_profile_blocks(blocks)
+
+    def run():
+        ctx = EdgeWeighting.weighted_edges(blocks, pb, WeightTypes.CBS)
+        kept = CNP.prune(ctx, 2, comparison)
+        plan = kept._jdf.queryExecution().executedPlan().toString()
+        return edge_map(kept), "BroadcastHashJoin" in plan
+
+    broadcast, hinted = run()
+    with _shuffled(spark):
+        shuffled, shuffled_hinted = run()
+    assert hinted and not shuffled_hinted
+    assert broadcast == shuffled
+    assert broadcast
 
 
 def test_train_score_reads_the_pin(records):

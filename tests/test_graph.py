@@ -200,3 +200,34 @@ def test_triangles_empty_and_triangle_free(spark):
     assert Triangles.enumerate(empty).count() == 0
     path = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], ["p1", "p2"])
     assert Triangles.enumerate(path).count() == 0
+
+
+
+def test_pagerank_node_sized_joins_broadcast(spark, monkeypatch):
+    """Each iteration's three node-sized joins (pr ⋈ outdeg, edges ⋈
+    per-source terms, nodes ⋈ contributions) broadcast their build
+    side, bounded by the node count PageRank already takes: a pin has
+    no size statistics, so Catalyst alone would sort-merge them. The
+    joins run inside the pins, so the test reads the plan of the last
+    frame PageRank pins."""
+    from sparker_spark.graph import PageRank
+    from sparker_spark.session import scoped_conf
+
+    edges = spark.createDataFrame([(0, i) for i in range(1, 5)], ["p1", "p2"])
+    frame = type(edges)
+    pin = frame.localCheckpoint
+    plans = []
+
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return pin(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", recording)
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    with scoped_conf(spark, {threshold: "10MB"}):
+        PageRank.run(edges).collect()
+    assert plans[-1].count("BroadcastHashJoin") == 3
+    assert "SortMergeJoin" not in plans[-1]
+    with scoped_conf(spark, {threshold: "-1"}):
+        PageRank.run(edges).collect()
+    assert "BroadcastHashJoin" not in plans[-1]

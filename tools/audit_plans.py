@@ -17,9 +17,14 @@ SF and inspects the formatted physical plan for scale anti-patterns:
     failure
   * one checkpoint (one ``Scan ExistingRDD`` RDD id) under more than
     one ``BroadcastExchange`` — the same pinned relation built into
-    several broadcasts, e.g. one per projection of a block index, or
-    WNP's two threshold joins. Each broadcast is a job of its own;
-    reported, not fatal
+    several broadcasts, e.g. one per projection of a block index.
+    The audit reads the plan before AQE runs, and AQE's exchange
+    reuse runs identical builds once: WNP's two threshold joins
+    broadcast the same relation, and in the final plan the second is
+    a ``ReusedExchange`` of the first (one broadcast job). So the
+    count is an upper bound on the broadcast jobs; only builds that
+    differ (another projection, as in CNP's two membership joins)
+    each run a job. Reported, not fatal
 
 Usage: python tools/audit_plans.py [sf_dir] [query ...]
 Exit code 1 if any query outside the allowlist plans a nested loop.
@@ -75,7 +80,9 @@ def _tree(plan: str) -> list[tuple[int, str, str]]:
 def repeated_checkpoint_broadcasts(plan: str) -> dict[str, int]:
     """RDD -> the number of ``BroadcastExchange`` nodes that build a
     broadcast over that checkpoint's ``Scan ExistingRDD`` (the nearest
-    broadcast above each scan), for the RDDs broadcast more than once."""
+    broadcast above each scan), for the RDDs broadcast more than once.
+    ``plan`` is the plan before AQE, so identical builds that AQE will
+    reuse count once each."""
     rdd_of = {
         m.group(1): m.group(2)
         for m in re.finditer(
@@ -181,7 +188,7 @@ def main():
         if pid_reads:
             flags.append(f"ranked-read exchange x{pid_reads}")
         for rdd, n in sorted(repeated_checkpoint_broadcasts(plan).items()):
-            flags.append(f"checkpoint broadcast x{n} ({rdd})")
+            flags.append(f"checkpoint under {n} broadcasts, before reuse ({rdd})")
         if wide_scans:
             note = ALLOW_WIDE.get(name)
             flags.append(
