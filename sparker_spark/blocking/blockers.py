@@ -209,9 +209,11 @@ class Blocking:
             for k in c["keys"]:
                 entries[k] = int(c["cluster_id"])
 
+        # typed, so that an empty map (no attribute clustered, e.g. no
+        # profiles) still resolves
         mapping = F.create_map(
             *[x for k, v in entries.items() for x in (F.lit(k), F.lit(v))]
-        )
+        ).cast("map<string,int>")
 
         values = _base_values(profiles, attributes_to_exclude)
         toks = values.select(

@@ -12,12 +12,11 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparker_spark.attribute_clustering import AttributeClustering, band_chunks
 from sparker_spark.blocking.blockers import Blocking
-from sparker_spark.blocking.strategies import TOKEN_SPLIT_RE
 from sparker_spark.feature_generator import FeatureGenerator
 from sparker_spark.llm.dedup import Dedup
 from sparker_spark.llm.hashing import (
@@ -90,14 +89,6 @@ def _customer_eav(spark, sf_dir) -> DataFrame:
     )
 
 
-def _attr_tokens(eav: DataFrame, distinct: bool) -> DataFrame:
-    toks = eav.select(
-        "attr_key",
-        F.explode(F.split(F.lower("value"), TOKEN_SPLIT_RE)).alias("token"),
-    ).where(F.length("token") > 0)
-    return toks.distinct() if distinct else toks
-
-
 DUCK_CUST_EAV = """
 eav AS MATERIALIZED (
   SELECT pid, source_id, attr, value FROM (
@@ -127,17 +118,12 @@ attr_h AS (
 
 
 def q_attr_entropy(spark, sf_dir):
-    toks = _attr_tokens(_customer_eav(spark, sf_dir), distinct=False)
-    cnt = toks.groupBy("attr_key", "token").agg(F.count("*").alias("c"))
-    per = cnt.groupBy("attr_key").agg(
-        F.sum("c").alias("total"),
-        F.sum(F.col("c") * F.log2("c")).alias("sum_clog"),
+    table = AttributeClustering.signature_table(
+        _customer_eav(spark, sf_dir), ATTR_HASHES, ATTR_SEED
     )
-    return per.select(
-        "attr_key",
-        rnd(F.log2("total") - F.col("sum_clog") / F.col("total"), 6).alias(
-            "entropy"
-        ),
+    return spark.createDataFrame(
+        [(k, _py_rnd(h, 6)) for k, h in zip(table.keys, table.entropy)],
+        "attr_key STRING, entropy DOUBLE",
     )
 
 
@@ -186,14 +172,12 @@ sim AS MATERIALIZED (
             JOIN sigs s2 ON cand.a2 = s2.attr_key)"""
 
 
-def _attr_sim_edges(spark, sf_dir) -> DataFrame:
-    toks = _attr_tokens(_customer_eav(spark, sf_dir), distinct=True)
-    sigs = AttributeClustering.signatures(toks, ATTR_HASHES, ATTR_SEED)
-    return AttributeClustering.similarity_edges(sigs, ATTR_HASHES, ATTR_LSH_T)
-
-
 def q_attr_sim_edges(spark, sf_dir):
-    return _attr_sim_edges(spark, sf_dir).select(
+    table = AttributeClustering.signature_table(
+        _customer_eav(spark, sf_dir), ATTR_HASHES, ATTR_SEED
+    )
+    edges = AttributeClustering.similarity_edges(table, ATTR_LSH_T)
+    return spark.createDataFrame(edges, "a1 STRING, a2 STRING, sim DOUBLE").select(
         "a1", "a2", rnd("sim", 6).alias("sim")
     )
 
@@ -207,26 +191,12 @@ SELECT a1, a2, round(sim, 6) AS sim FROM sim"""
 # ---------------------------------------------------------------- L6+L7+L8:
 # top edges -> connected components -> clusters with entropy
 def _canonical_clusters(spark, sf_dir) -> list[dict]:
-    """BLAST attribute clustering over the customer EAV with
-    deterministic cluster ids: non-default clusters ordered by smallest
-    member key (0..n−1), default cluster last (id n)."""
-    eav = _customer_eav(spark, sf_dir)
-    toks_all = _attr_tokens(eav, distinct=False).localCheckpoint(eager=False)
-    toks = toks_all.distinct()
-    sigs = AttributeClustering.signatures(toks, ATTR_HASHES, ATTR_SEED)
-    edges = AttributeClustering.similarity_edges(sigs, ATTR_HASHES, ATTR_LSH_T)
-    top = AttributeClustering.top_edges(edges, max_factor=1.0)
-    all_attrs = [r["attr_key"] for r in toks.select("attr_key").distinct().collect()]
-    clusters = AttributeClustering.connected_clusters(top, all_attrs)
-    clusters = AttributeClustering.cluster_entropies(toks_all, clusters)
-    real = sorted(
-        (c for c in clusters if "name" not in c), key=lambda c: min(c["keys"])
+    """BLAST attribute clustering over the customer EAV; the library's
+    cluster ids are canonical (real clusters ordered by smallest member
+    key, default cluster last)."""
+    return AttributeClustering.cluster_similar_attributes(
+        _customer_eav(spark, sf_dir), ATTR_HASHES, ATTR_LSH_T, seed=ATTR_SEED
     )
-    default = [c for c in clusters if "name" in c]
-    out = []
-    for cid, c in enumerate(real + default):
-        out.append({**c, "cluster_id": cid})
-    return out
 
 
 def q_attr_clusters(spark, sf_dir):

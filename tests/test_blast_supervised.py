@@ -1,15 +1,21 @@
 """Tests for BLAST attribute clustering (M5) and supervised
 meta-blocking (M6), including feature parity vs the reference on cora."""
 
+import json
 import os
+import pickle
 import random
+import subprocess
 import sys
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from sparker_spark.attribute_clustering import (
+    DEFAULT_CLUSTER_NAME,
     AttributeClustering,
+    SignatureTable,
     band_chunks,
     get_hashes_bands,
 )
@@ -19,6 +25,7 @@ from sparker_spark.filters import BlockFiltering, BlockPurging
 from sparker_spark.supervised import SupervisedMB
 from sparker_spark.wrappers import CSVWrapper, DataFrameWrapper
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CORA = "/root/reference/python/datasets/dirty/cora/cora.csv"
 # the reference checkout (library and cora); the other tests here
 # need neither
@@ -44,29 +51,152 @@ def test_get_hashes_bands():
     sys.path.remove("/root/reference/python")
 
 
-def test_attribute_clustering_two_sources(spark):
+def _two_sources(spark, reverse=False):
     a = spark.createDataFrame(
-        [("1", "john smith", "acme corp"), ("2", "jane doe", "globex inc")],
-        ["id", "fullname", "company"],
+        [
+            ("1", "john smith", "acme corp", "1999"),
+            ("2", "jane doe", "globex inc", "2004"),
+        ],
+        ["id", "fullname", "company", "year"],
     )
     b = spark.createDataFrame(
-        [("x", "john smith", "acme corp"), ("y", "jane doe", "globex inc")],
-        ["id", "name", "employer"],
+        [
+            ("x", "john smith", "acme corp", "1999"),
+            ("y", "jane doe", "globex inc", "2004"),
+        ],
+        ["id", "name", "employer", "date"],
     )
     pa = DataFrameWrapper.load_profiles(a, real_id_field="id", source_id=0)
     pb = DataFrameWrapper.load_profiles(
         b, real_id_field="id", source_id=1, start_id_from=2
     )
-    profiles = pa.unionByName(pb)
+    return pb.unionByName(pa).repartition(3) if reverse else pa.unionByName(pb)
+
+
+def test_attribute_clustering_two_sources(spark):
     clusters = AttributeClustering.cluster_similar_attributes(
-        profiles, num_hashes=64, target_threshold=0.4
+        _two_sources(spark), num_hashes=64, target_threshold=0.4
     )
-    merged = {frozenset(c["keys"]) for c in clusters if len(c["keys"]) == 2}
-    # identical token distributions must cluster across sources
-    assert frozenset({"0_fullname", "1_name"}) in merged
-    assert frozenset({"0_company", "1_employer"}) in merged
-    for c in clusters:
+    # identical token distributions cluster across sources; ids are
+    # canonical (smallest member key first), the default cluster last
+    assert [c["keys"] for c in clusters] == [
+        ["0_company", "1_employer"],
+        ["0_fullname", "1_name"],
+        ["0_year", "1_date"],
+        [],
+    ]
+    assert [c["cluster_id"] for c in clusters] == [0, 1, 2, 3]
+    assert clusters[-1]["name"] == DEFAULT_CLUSTER_NAME
+    for c in clusters[:-1]:
         assert c["entropy"] > 0
+
+
+# hand-built signatures, 8 hashes in 4 bands of 2 (t = 0.6)
+HAND_SIGS = {
+    "0_a": [1, 1, 10, 11, 12, 13, 14, 15],
+    "0_b": [1, 1, 10, 11, 12, 13, 14, 15],  # 0_a's twin, same source
+    "0_c": [5, 5, 6, 6, 30, 31, 32, 33],
+    "0_d": [5, 5, 60, 61, 62, 63, 64, 65],
+    "1_w": [90, 91, 92, 93, 94, 95, 96, 97],  # shares no band
+    "1_x": [1, 1, 20, 21, 22, 23, 24, 25],  # band 0 only, with 0_a/0_b
+    "1_y": [5, 5, 6, 6, 40, 41, 42, 43],
+    "1_z": [5, 5, 6, 6, 50, 51, 52, 53],  # ties 1_y as 0_c's neighbor
+}
+
+
+def _hand_table():
+    keys = sorted(HAND_SIGS)
+    return SignatureTable(
+        keys,
+        np.array([HAND_SIGS[k] for k in keys], dtype=np.int64),
+        [float(i) for i in range(len(keys))],
+        [8.0] * len(keys),
+    )
+
+
+def test_driver_kernel_on_hand_built_table():
+    assert band_chunks(8, 0.6) == [(0, 2), (2, 2), (4, 2), (6, 2)]
+    table = _hand_table()
+    edges = AttributeClustering.similarity_edges(table, 0.6)
+    # one shared band is enough; 0_a/0_b and 1_y/1_z are same-source
+    assert edges == [
+        ("0_a", "1_x", 0.25),
+        ("0_b", "1_x", 0.25),
+        ("0_c", "1_y", 0.5),
+        ("0_c", "1_z", 0.5),
+        ("0_d", "1_y", 0.25),
+        ("0_d", "1_z", 0.25),
+    ]
+    top = AttributeClustering.top_edges(edges)
+    # ties are kept both ways; 1_y and 1_z drop their 0.25 edge to 0_d
+    assert sorted(top) == sorted(
+        edges + [("1_x", "0_a", 0.25), ("1_x", "0_b", 0.25), ("1_y", "0_c", 0.5), ("1_z", "0_c", 0.5)]
+    )
+    clusters = AttributeClustering.clusters_from_table(table, 0.6)
+    assert clusters == [
+        {"cluster_id": 0, "keys": ["0_a", "0_b", "1_x"], "entropy": (0 + 1 + 5) / 3},
+        {"cluster_id": 1, "keys": ["0_c", "0_d", "1_y", "1_z"], "entropy": (2 + 3 + 6 + 7) / 4},
+        {"cluster_id": 2, "keys": ["1_w"], "entropy": 4.0, "name": DEFAULT_CLUSTER_NAME},
+    ]
+    normalized = AttributeClustering.clusters_from_table(table, 0.6, normalize_entropy=True)
+    assert normalized[2]["entropy"] == 0.5
+    unweighted = AttributeClustering.clusters_from_table(table, 0.6, compute_entropy=False)
+    assert {c["entropy"] for c in unweighted} == {1.0}
+
+
+def test_driver_kernel_on_empty_table():
+    empty = SignatureTable([], np.zeros((0, 8), dtype=np.int64), [], [])
+    assert AttributeClustering.clusters_from_table(empty, 0.6) == [
+        {"cluster_id": 0, "keys": [], "entropy": 1.0, "name": DEFAULT_CLUSTER_NAME}
+    ]
+
+
+KERNEL_IN_SUBPROCESS = """
+import json, pickle, sys
+from sparker_spark.attribute_clustering import AttributeClustering
+table = pickle.load(sys.stdin.buffer)
+print(json.dumps(AttributeClustering.clusters_from_table(table, 0.4)))
+"""
+
+
+def test_cluster_list_is_deterministic(spark):
+    """Row order and PYTHONHASHSEED leave the cluster list, ids
+    included, unchanged."""
+    forward = AttributeClustering.cluster_similar_attributes(
+        _two_sources(spark), num_hashes=64, target_threshold=0.4
+    )
+    table = AttributeClustering.signature_table(
+        _two_sources(spark, reverse=True), num_hashes=64
+    )
+    assert AttributeClustering.clusters_from_table(table, 0.4) == forward
+    for hash_seed in ("1", "2"):
+        out = subprocess.run(
+            [sys.executable, "-c", KERNEL_IN_SUBPROCESS],
+            input=pickle.dumps(table),
+            capture_output=True,
+            check=True,
+            cwd=REPO_ROOT,
+            env={**os.environ, "PYTHONHASHSEED": hash_seed},
+        )
+        assert json.loads(out.stdout) == forward
+
+
+def test_cluster_similar_attributes_job_count(spark):
+    """One aggregate, one collect: the clustering's own jobs, counted
+    by job group over settled profiles, are the aggregate's two shuffle
+    stages and the collect (the DataFrame chain ran 11)."""
+    sc = spark.sparkContext
+    loaded = _two_sources(spark)
+    profiles = spark.createDataFrame(loaded.collect(), loaded.schema)
+    group = "test_blast_supervised.cluster_similar_attributes"
+    sc.setJobGroup(group, group)
+    try:
+        AttributeClustering.cluster_similar_attributes(
+            profiles, num_hashes=64, target_threshold=0.4
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
 
 
 def test_blast_cluster_blocking(spark):

@@ -50,6 +50,42 @@ def test_empty_er_chain(spark):
     )
 
 
+def test_empty_and_single_source_attribute_clustering(spark):
+    """No cross-source pair means no real cluster: only the default
+    cluster comes back, and zero rows flow through the BLAST chain."""
+    from sparker_spark.attribute_clustering import (
+        DEFAULT_CLUSTER_NAME,
+        AttributeClustering,
+    )
+
+    empty = spark.createDataFrame(
+        [], "profile_id long, source_id int, original_id string, attr string, value string"
+    )
+    clusters = AttributeClustering.cluster_similar_attributes(empty, num_hashes=16)
+    assert clusters == [
+        {"cluster_id": 0, "keys": [], "entropy": 1.0, "name": DEFAULT_CLUSTER_NAME}
+    ]
+    blocks = Blocking.create_blocks_clusters(empty, clusters, clean=True)
+    purged = BlockPurging.block_purging(blocks, 1.005)
+    _, pb_filtered, rebuilt = BlockFiltering.block_filtering_quick(purged, 0.8)
+    assert (
+        WNP.wnp(
+            rebuilt, pb_filtered, ThresholdTypes.AVG, WeightTypes.CHI_SQUARE,
+            use_entropy=True, comparison_type=ComparisonTypes.OR,
+        ).count()
+        == 0
+    )
+
+    one_source = spark.createDataFrame(
+        [(0, 0, "a", "name", "john smith"), (1, 0, "b", "city", "rome"), (2, 0, "c", "name", "jane doe")],
+        empty.schema,
+    )
+    clusters = AttributeClustering.cluster_similar_attributes(one_source, num_hashes=16)
+    assert [(c["cluster_id"], c["keys"], c.get("name")) for c in clusters] == [
+        (0, ["0_city", "0_name"], DEFAULT_CLUSTER_NAME)
+    ]
+
+
 def test_empty_dedup_family(spark):
     from sparker_spark.llm.dedup import Dedup
 

@@ -1,9 +1,10 @@
 """Stage profile of pipeline_blast_e2e in a quiet window (r13, VERDICT
 ask #5): time each stage of the chain cumulatively — attribute
-clustering (driver-side MinHash cluster derivation), cluster blocking,
-purge, filter, chi²+entropy weighting, WNP — so the 11 s pipeline cost
-is attributed, not guessed. Reps are clean-JVM-warm (clearCache + gc
-between reps), matching bench.py's protocol.
+clustering (one Spark aggregate, then LSH and components on the
+driver), cluster blocking, purge, filter, chi²+entropy weighting, WNP
+— so the 11 s pipeline cost is attributed, not guessed. Reps are
+clean-JVM-warm (clearCache + gc between reps), matching bench.py's
+protocol.
 Usage: python tools/profile_blast.py [reps=3]
 """
 
@@ -58,7 +59,7 @@ def main():
 
         spark.sparkContext.setJobDescription("blast: attribute clustering")
         clusters = _canonical_clusters(spark, SF_DIR)
-        mark("attr_clustering (driver clusters)")
+        mark("attr_clustering (one aggregate + driver LSH)")
 
         spark.sparkContext.setJobDescription("blast: cluster blocking")
         blocks = _cluster_blocks(spark, SF_DIR)
